@@ -260,19 +260,25 @@ def register_external_table(
 
     exists = spark.catalog.tableExists(qualified)
     if exists and not full_refresh:
+        import json
+
+        from pyspark.sql.types import StructType
+
         # compare (name, type) pairs: a type-widening evolve-append
         # (int -> long) leaves the column SET identical, but a catalog
         # table still typed int over INT64 files fails every read with
-        # SchemaColumnConvertNotSupportedException until re-created
-        existing = {
-            (c.name.lower(), c.dataType.lower().replace(" ", ""))
-            for c in spark.catalog.listColumns(qualified)
-        }
-        incoming = {
-            (f.name.lower(), f.dataType.simpleString().lower().replace(" ", ""))
-            for f in schema.fields
-        }
-        if existing != incoming:
+        # SchemaColumnConvertNotSupportedException until re-created.
+        # This runs on every append, so it reads only the schema the
+        # catalog stores: resolving the relation (spark.table) would list
+        # an unpartitioned table's files and cache that listing
+        state = spark._jsparkSession.sessionState()
+        meta = state.catalog().getTableMetadata(state.sqlParser().parseTableIdentifier(qualified))
+        stored = StructType.fromJson(json.loads(meta.schema().json()))
+
+        def name_types(fields):
+            return {(f.name.lower(), f.dataType.simpleString()) for f in fields}
+
+        if name_types(stored.fields) != name_types(schema.fields):
             exists = False  # schema drift -> re-create below
 
     if not exists or full_refresh:

@@ -2176,6 +2176,55 @@ def test_sink_append_evolves_schema(spark, tmp_path):
     spark.sql("DROP TABLE db_evolve.ev")
 
 
+def test_sink_same_schema_append_keeps_catalog_table(spark, tmp_path):
+    """A same-schema append registers only its new partitions: a table
+    property set after the first write survives (no DROP/CREATE), and
+    the appended partition is queryable."""
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.sinks.parquet_sink import (
+        write_partitioned_parquet,
+    )
+
+    ddl = "OrderKey int, amt decimal(12,2), d date, tags array<string>, year string"
+
+    def append(rows):
+        write_partitioned_parquet(
+            spark.sql(f"SELECT * FROM VALUES {rows} AS t(OrderKey, amt, d, tags, year)").to(
+                spark.createDataFrame([], ddl).schema
+            ),
+            str(tmp_path), "lake/keep", ["year"],
+            target_database="db_keep", table_name="keep", mode="append",
+        )
+
+    append("(1, 1.25, DATE'2024-01-02', array('a'), '2024')")
+    spark.sql("ALTER TABLE db_keep.keep SET TBLPROPERTIES ('probe' = 'kept')")
+    append("(2, 2.50, DATE'2025-03-04', array('b', 'c'), '2025')")
+    props = {r.key: r.value for r in spark.sql("SHOW TBLPROPERTIES db_keep.keep").collect()}
+    assert props.get("probe") == "kept"
+    got = spark.sql("SELECT OrderKey, amt FROM db_keep.keep WHERE year = '2025'").collect()
+    assert [(r.OrderKey, str(r.amt)) for r in got] == [(2, "2.50")]
+    assert spark.table("db_keep.keep").count() == 2
+    spark.sql("DROP TABLE db_keep.keep")
+
+
+def test_sink_unpartitioned_appends_visible_in_same_session(spark, tmp_path):
+    """The drift probe on an existing table reads catalog metadata only:
+    it must not resolve (and cache) the relation of an unpartitioned
+    table, or a same-session read after later appends misses their
+    files."""
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.sinks.parquet_sink import (
+        write_partitioned_parquet,
+    )
+
+    for i in range(3):
+        write_partitioned_parquet(
+            spark.sql(f"SELECT {i} AS OrderKey, 'x{i}' AS note"),
+            str(tmp_path), "lake/flat", [],
+            target_database="db_flat", table_name="flat", mode="append",
+        )
+    assert spark.table("db_flat.flat").count() == 3
+    spark.sql("DROP TABLE db_flat.flat")
+
+
 def test_snapshot_diff_row_level(spark):
     """snapshot_diff classifies added/removed/changed/unchanged and
     flags exactly the drifted columns, null-safely."""

@@ -4,6 +4,7 @@ sequential chains, reconciliation outcomes, plan-file lifecycle."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -468,6 +469,49 @@ def test_claim_run_atomic_under_thread_hammer(tmp_path):
     assert led.claim_run(
         {"ExecutionHashId": "h1", "SourceTable": "t", "Query": "q"}
     )
+
+
+def test_ledger_torn_tail_waits_and_bad_line_names_offset(tmp_path):
+    """A partial trailing line stays unread until it is complete,
+    instead of failing every read; a claim past it (under the
+    single-writer rule, a crashed write) is refused before anything is
+    written.  The next append closes a crash remnant off instead of
+    absorbing its event, and a complete line that does not parse raises
+    ValueError naming the path and byte offset."""
+    path = tmp_path / "ledger.jsonl"
+    led = Ledger(path)
+    led.put_item({"ExecutionHashId": "h1", "SourceTable": "t", "GlueJobFinalStatus": "SUCCEEDED"})
+    torn_at = path.stat().st_size
+    with path.open("ab") as f:
+        f.write(b'{"_op": "put", "ExecutionHashId": "h2", "SourceTable": "t"')
+    size = path.stat().st_size
+    for reader in (led, Ledger(path)):
+        assert reader.get("h2", "t") is None
+        assert reader.final_status("h1", "t") == "SUCCEEDED"
+        assert set(reader.current_state()) == {("h1", "t")}
+        with pytest.raises(
+            ValueError, match=rf"{re.escape(str(path))}: unterminated .* byte offset {torn_at}\b"
+        ):
+            reader.claim_run({"ExecutionHashId": "h3", "SourceTable": "t"})
+        assert path.stat().st_size == size
+    with path.open("ab") as f:
+        f.write(b', "GlueJobFinalStatus": "SUCCEEDED"}\n')
+    assert led.final_status("h2", "t") == "SUCCEEDED"
+    assert not led.claim_run({"ExecutionHashId": "h2", "SourceTable": "t"})
+    assert led.claim_run({"ExecutionHashId": "h3", "SourceTable": "t"})
+
+    # a crash remnant followed by an append: the remnant ends up on a
+    # line of its own and the update row stays intact after it
+    bad_at = path.stat().st_size
+    with path.open("ab") as f:
+        f.write(b'{"_op": "upd')
+    led.update_item("h1", "t", GlueJobFinalStatus="FAILED")
+    lines = path.read_bytes().split(b"\n")
+    assert lines[-3] == b'{"_op": "upd' and lines[-1] == b""
+    assert json.loads(lines[-2])["GlueJobFinalStatus"] == "FAILED"
+    for reader in (led, Ledger(path)):
+        with pytest.raises(ValueError, match=rf"{re.escape(str(path))}.*byte offset {bad_at}\b"):
+            reader.claim_run({"ExecutionHashId": "h4", "SourceTable": "t"})
 
 
 def test_concurrent_plans_same_acid_table_occ(spark, tmp_path):

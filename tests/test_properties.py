@@ -7,7 +7,7 @@ import re
 
 import pytest
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.operators.cleaning import (
@@ -729,3 +729,103 @@ def test_expire_snapshots_invariants(spark, tmp_path_factory, ops, retain):
             t.snapshot(spark, version=v)
     t.append(rows(1))
     assert t.latest_version() == latest + 1
+
+
+_LEDGER_KEYS = [(h, t) for h in ("h0", "h1", "h2") for t in ("ta", "tb")]
+_LEDGER_STATUS = st.sampled_from([None, "", "SUCCEEDED", "FAILED", "RUNNING"])
+_LEDGER_OPS = st.one_of(
+    st.tuples(st.just("put_item"), st.integers(0, 1), st.integers(0, 5), _LEDGER_STATUS),
+    st.tuples(st.just("update_item"), st.integers(0, 1), st.integers(0, 5), _LEDGER_STATUS),
+    st.tuples(st.just("create_run"), st.integers(0, 1), st.integers(0, 5), _LEDGER_STATUS),
+    st.tuples(st.just("claim_run"), st.integers(0, 1), st.integers(0, 5), _LEDGER_STATUS),
+    st.tuples(st.just("record_skip"), st.integers(0, 1), st.integers(0, 5), _LEDGER_STATUS),
+    st.tuples(st.just("replace"), st.just(0), st.just(0), st.just(None)),
+    st.tuples(st.just("truncate"), st.just(0), st.just(0), st.just(None)),
+    st.tuples(st.just("mutate"), st.just(0), st.integers(0, 5), st.just(None)),
+)
+
+
+def _reference_fold(events):
+    """The whole-log fold, written out independently of ``Ledger``."""
+    state = {}
+    for ev in events:
+        key = (ev.get("ExecutionHashId"), ev.get("SourceTable"))
+        op = ev.pop("_op", "put")
+        ev.pop("_event_ts", None)
+        if op == "put" or key not in state:
+            state[key] = ev
+        else:
+            state[key].update(ev)
+    return state
+
+
+@given(st.lists(_LEDGER_OPS, min_size=1, max_size=40))
+# the second writer sleeps through two replacements: the filesystem may
+# hand the second replacing file the inode number of the one it last read
+@example(
+    ops=[
+        ("put_item", 0, 0, None),
+        ("claim_run", 1, 0, None),
+        ("replace", 0, 0, None),
+        ("put_item", 0, 0, ""),
+        ("replace", 0, 0, None),
+        ("claim_run", 1, 0, None),
+    ]
+)
+@settings(max_examples=60, deadline=None)
+def test_ledger_incremental_fold_matches_full_fold(tmp_path_factory, ops):
+    """Property: for ANY interleaving of writes by two ``Ledger``
+    instances on one path, plus file replacement (new inode),
+    truncation and mutation of returned items, a long-lived instance's
+    ``get``/``current_state`` equal a fresh instance's full fold and an
+    independent reference fold of the raw events, after every step;
+    the other writer agrees at the end."""
+    import os
+
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.sinks.ledger import (
+        Ledger,
+    )
+
+    path = tmp_path_factory.mktemp("ledger_prop") / "ledger.jsonl"
+    writers = [Ledger(path), Ledger(path)]
+    long_lived = writers[0]
+    for i, (op, w, k, status) in enumerate(ops):
+        led = writers[w]
+        hash_id, table = _LEDGER_KEYS[k]
+        if op == "put_item":
+            led.put_item({"ExecutionHashId": hash_id, "SourceTable": table, "GlueJobFinalStatus": status, "N": i})
+        elif op == "update_item":
+            led.update_item(hash_id, table, GlueJobFinalStatus=status, N=i)
+        elif op == "create_run":
+            led.create_run({"ExecutionHashId": hash_id, "SourceTable": table, "Query": f"q{i}"})
+        elif op == "claim_run":
+            led.claim_run({"ExecutionHashId": hash_id, "SourceTable": table, "Query": f"q{i}"})
+        elif op == "record_skip":
+            led.record_skip(table, hash_id, {"Jobs": [{"Query": f"q{i}"}], "Meta": {"n": i}})
+        elif op == "replace" and path.exists():
+            # same-or-larger file under a new inode, with a different fold
+            lines = path.read_bytes().splitlines(keepends=True)
+            tmp = path.with_name("ledger.tmp")
+            tmp.write_bytes(b"".join(reversed(lines)) + b"".join(lines[:1]))
+            os.replace(tmp, path)
+        elif op == "truncate" and path.exists():
+            lines = path.read_bytes().splitlines(keepends=True)
+            os.truncate(path, sum(len(line) for line in lines[: len(lines) // 2]))
+        elif op == "mutate":
+            for key in ((hash_id, table), (f"JobHasRunOrIsRunning-{table}-{hash_id}", table)):
+                item = long_lived.get(*key)
+                if item is not None:
+                    item["GlueJobFinalStatus"] = "MUTATED"
+                    if "TriedToRunJob" in item:
+                        item["TriedToRunJob"]["Jobs"].append({"Query": "mutated"})
+                        item["TriedToRunJob"]["Meta"]["n"] = -1
+            for v in long_lived.current_state().values():
+                v.clear()
+
+        want = _reference_fold(Ledger(path).events())
+        assert Ledger(path).current_state() == want
+        assert long_lived.current_state() == want
+        for key in set(want) | set(_LEDGER_KEYS):
+            assert long_lived.get(*key) == want.get(key)
+            assert long_lived.final_status(*key) == (want[key].get("GlueJobFinalStatus") if key in want else None)
+    assert writers[1].current_state() == want
