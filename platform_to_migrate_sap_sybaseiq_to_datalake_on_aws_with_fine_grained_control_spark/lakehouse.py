@@ -84,16 +84,6 @@ __all__ = [
     "UnsupportedTableFeatureError",
     "SUPPORTED_READER_FEATURES",
     "foreach_batch_sink",
-    "txn_append",
-    "txn_overwrite",
-    "txn_compact",
-    "txn_merge",
-    "txn_delete",
-    "txn_restore",
-    "snapshot",
-    "read_changes",
-    "vacuum",
-    "history",
 ]
 
 _LOG_DIR = "_txn_log"
@@ -574,6 +564,40 @@ def _bloom_maybe_contains(bloom: dict, value) -> bool:
     return True
 
 
+def _harvest(
+    staging: Path, data: bool, bloom_index: dict, rel: Path
+) -> dict | None:
+    """Commit facts of one staged file, read from its footer: ``size``
+    and ``rows``; for a data file also its ``partition_values`` (from
+    the hive dirs in ``rel``) and min/max ``stats``, plus a ``bloom``
+    per declared ``bloom_index`` column stored in the file.  None for a
+    zero-row task output, which is never committed."""
+    import pyarrow.parquet as pq
+
+    path = staging / rel
+    pf = pq.ParquetFile(path)
+    rows = pf.metadata.num_rows
+    if rows == 0:
+        return None
+    facts: dict = {"size": path.stat().st_size, "rows": rows}
+    if not data:
+        return facts
+    facts["partition_values"] = _parse_partition_dirs(rel.parent)
+    facts["stats"] = _collect_file_stats(pf)
+    blooms = {}
+    for col, spec in bloom_index.items():
+        if col not in pf.schema_arrow.names:
+            continue  # partition column: partition values prune exactly
+        b = _bloom_build(
+            pf.read(columns=[col]).column(0).to_pylist(), spec.get("fpp", 0.01)
+        )
+        if b is not None:
+            blooms[col] = b
+    if blooms:
+        facts["bloom"] = blooms
+    return facts
+
+
 def _physical_struct(schema: StructType, mapping: dict | None) -> StructType:
     """The schema as it lives in parquet footers: logical field names
     replaced by their frozen physical names (identity when unmapped)."""
@@ -1010,18 +1034,24 @@ class TransactionLog:
         max_records_per_file: int | None = None,
         mapping: dict | None = None,
         bloom_index: dict | None = None,
+        dest: str | None = None,
     ) -> list[dict]:
-        """Write ``df``'s files under uuid names inside the table dir.
+        """Write ``df``'s files into the table dir under uuid names and
+        return one commit entry per non-empty file, in staged-path order.
 
+        ``dest`` None stages DATA files at the table root.  ``"_cdf"``
+        (change feed) or ``"_dv"`` (deletion vectors) stages sidecar
+        files into a fresh ``<dest>/<id>/`` dir; their entries carry
+        only ``path``/``size``/``rows``, and snapshots never read them.
         Staged files are invisible until a commit references them: the
-        read path never lists the directory.  Row counts come from a
-        footer-only pyarrow read (O(files) metadata, zero data IO).
+        read path never lists the directory.
 
         ``mapping`` (logical→physical): staged BYTES always carry the
         frozen physical column names — renames are metadata, never a
         rewrite — so the logical frame is renamed before writing.
         ``partition_keys`` are given physical."""
-        import pyarrow.parquet as pq
+        from concurrent.futures import ThreadPoolExecutor
+        from functools import partial
 
         if mapping:
             df = _rename_frame(df, mapping)
@@ -1032,186 +1062,32 @@ class TransactionLog:
         if partition_keys:
             writer = writer.partitionBy(*partition_keys)
         writer.save(str(staging))
-        if bloom_index:
-            # a declared bloom index makes staging DATA-proportional
-            # (every indexed column is re-read and hashed); that work
-            # runs as a distributed job, never on the driver
-            adds = self._stage_files_distributed(
-                df.sparkSession, staging, bloom_index
-            )
-            shutil.rmtree(staging)
-            return adds
-        def _stage_one(f: Path) -> dict | None:
-            rel = f.relative_to(staging)
-            pf = pq.ParquetFile(f)
-            if pf.metadata.num_rows == 0:
-                return None  # empty task output: never commit a 0-row file
-            # harvest rows + data-skipping bounds from the ONE parsed
-            # footer before the rename — the bytes don't change, and a
-            # second ParquetFile(dest) would re-read and re-parse the
-            # footer per file (O(files) wasted IO on every commit)
-            rows = pf.metadata.num_rows
-            stats = _collect_file_stats(pf)
-            dest_rel = rel.parent / f"{uuid.uuid4().hex[:12]}-{rel.name}"
-            dest = self.table_path / dest_rel
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            f.rename(dest)
-            entry = {
-                "path": dest_rel.as_posix(),
-                "size": dest.stat().st_size,
-                "rows": rows,
-                "partition_values": _parse_partition_dirs(rel.parent),
-                "stats": stats,
-            }
-            return entry
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        # rename + footer-read per file is IO-bound; a serial loop makes
-        # commit latency O(files) in round-trips — real pain at 100k
-        # files on an object store.  pool.map keeps the sorted order, so
-        # the add list (and every downstream hash/test) is deterministic.
-        staged = sorted(staging.rglob("*.parquet"))
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            adds = [a for a in pool.map(_stage_one, staged) if a is not None]
-        shutil.rmtree(staging)
-        return adds
-
-    def _stage_files_distributed(
-        self, spark: SparkSession, staging: Path, bloom_index: dict
-    ) -> list[dict]:
-        """Staging harvest for bloom-indexed tables, executor-side.
-
-        The footer walk (rows / min-max stats) is metadata-priced, but
-        a bloom build re-reads every indexed column and md5-hashes each
-        distinct value — DATA-proportional work that must not run on
-        the driver (a 100 TB append would re-read everything it just
-        wrote through one process).  The driver keeps only the O(files)
-        metadata renames; ONE Spark job over the renamed paths computes
-        rows/stats/blooms per file with the exact same functions the
-        driver path uses, so committed entries are bit-identical to the
-        pre-round-7 driver harvest.  Zero-row task outputs are dropped
-        (and unlinked) after the harvest reports them — same invariant
-        as the driver path, enforcement just moves after the map."""
-        items: list[tuple[str, str, dict]] = []
-        for f in sorted(staging.rglob("*.parquet")):
-            rel = f.relative_to(staging)
-            dest_rel = rel.parent / f"{uuid.uuid4().hex[:12]}-{rel.name}"
-            dest = self.table_path / dest_rel
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            f.rename(dest)
-            items.append(
-                (str(dest), dest_rel.as_posix(), _parse_partition_dirs(rel.parent))
-            )
-        if not items:
-            return []
-        bi = {k: dict(v) for k, v in sorted(bloom_index.items())}
-        collect_stats, bloom_build = _collect_file_stats, _bloom_build
-
-        def harvest(it: tuple[str, str, dict]):
-            import os as _os
-
-            import pyarrow.parquet as pq
-
-            path, dest_rel, pv = it
-            pf = pq.ParquetFile(path)
-            rows = pf.metadata.num_rows
-            if rows == 0:
-                return dest_rel, None  # empty task output: never commit
-            entry: dict = {
-                "path": dest_rel,
-                "size": _os.stat(path).st_size,
-                "rows": rows,
-                "partition_values": pv,
-                "stats": collect_stats(pf),
-            }
-            file_cols = set(pf.schema_arrow.names)
-            blooms = {}
-            for pcol, spec in bi.items():
-                if pcol not in file_cols:
-                    continue  # partition column: pv prunes exactly
-                b = bloom_build(
-                    pf.read(columns=[pcol]).column(0).to_pylist(),
-                    spec.get("fpp", 0.01),
-                )
-                if b is not None:
-                    blooms[pcol] = b
-            if blooms:
-                entry["bloom"] = blooms
-            return dest_rel, entry
-
-        sc = spark.sparkContext
-        n_slices = max(1, min(len(items), sc.defaultParallelism))
-        got = dict(sc.parallelize(items, n_slices).map(harvest).collect())
-        adds: list[dict] = []
-        for _, dest_rel, _ in items:  # original sorted order: adds stay
-            entry = got[dest_rel]  # deterministic for hashes/tests
-            if entry is None:
-                (self.table_path / dest_rel).unlink(missing_ok=True)
-            else:
-                adds.append(entry)
-        return adds
-
-    def _stage_cdf(self, df: DataFrame, mapping: dict | None = None) -> list[dict]:
-        """Stage per-row change records (``_change_type`` column) under
-        ``_cdf/<uuid>/`` — the change-data-feed sidecar.  CDF files are
-        NOT table data: snapshots never read them, vacuum manages them
-        by commit reference, and they become visible only through the
-        commit record's ``cdf`` list (same invisibility rule as data
-        files).  Like data files, sidecar BYTES carry physical column
-        names (stable across renames), so feeds spanning a rename read
-        correctly — ``read_change_feed`` maps back at read time."""
-        import pyarrow.parquet as pq
-
-        if mapping:
-            df = _rename_frame(df, mapping)
-        staging = self.table_path / f"_staging-{uuid.uuid4().hex}"
-        df.write.mode("error").format("parquet").save(str(staging))
+        rels = [f.relative_to(staging) for f in sorted(staging.rglob("*.parquet"))]
+        harvest = partial(
+            _harvest, staging, dest is None, dict(sorted((bloom_index or {}).items()))
+        )
+        if bloom_index and rels:
+            # a declared bloom index makes the harvest DATA-proportional
+            # (every indexed column is re-read and hashed): it runs as
+            # one Spark job, never on the driver
+            sc = df.sparkSession.sparkContext
+            n_slices = min(len(rels), sc.defaultParallelism)
+            facts = sc.parallelize(rels, n_slices).map(harvest).collect()
+        else:
+            # footer reads are IO-bound; pool.map keeps the sorted order,
+            # so the entry list (and every downstream hash) is stable
+            with ThreadPoolExecutor(max_workers=16) as pool:
+                facts = list(pool.map(harvest, rels))
+        sub = Path(dest, uuid.uuid4().hex[:12]) if dest else Path()
         out: list[dict] = []
-        cdf_dir = Path("_cdf") / uuid.uuid4().hex[:12]
-        for f in sorted(staging.rglob("*.parquet")):
-            n = pq.ParquetFile(f).metadata.num_rows
-            if n == 0:
-                continue
-            dest_rel = cdf_dir / f"{uuid.uuid4().hex[:12]}-{f.name}"
-            dest = self.table_path / dest_rel
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            f.rename(dest)
-            out.append(
-                {"path": dest_rel.as_posix(), "size": dest.stat().st_size, "rows": n}
-            )
-        shutil.rmtree(staging)
-        return out
-
-    def _stage_dv(self, dv_df: DataFrame, file_basenames: list[str]) -> list[dict]:
-        """Stage a deletion vector — ``(file_name, row_index)`` rows of
-        logically-deleted positions — under ``_dv/<uuid>/``.  Same
-        invisibility rule as data/CDF files: visible only through the
-        commit record.  Each entry records the basenames of the data
-        files it covers, so rewriting ops can prune vectors whose
-        files all died."""
-        import pyarrow.parquet as pq
-
-        staging = self.table_path / f"_staging-{uuid.uuid4().hex}"
-        dv_df.write.mode("error").format("parquet").save(str(staging))
-        out: list[dict] = []
-        dv_dir = Path("_dv") / uuid.uuid4().hex[:12]
-        for f in sorted(staging.rglob("*.parquet")):
-            n = pq.ParquetFile(f).metadata.num_rows
-            if n == 0:
-                continue
-            dest_rel = dv_dir / f"{uuid.uuid4().hex[:12]}-{f.name}"
-            dest = self.table_path / dest_rel
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            f.rename(dest)
-            out.append(
-                {
-                    "path": dest_rel.as_posix(),
-                    "size": dest.stat().st_size,
-                    "rows": n,
-                    "files": sorted(file_basenames),
-                }
-            )
+        for rel, f in zip(rels, facts):
+            if f is None:
+                continue  # zero-row task output: removed with the staging dir
+            dest_rel = sub / rel.parent / f"{uuid.uuid4().hex[:12]}-{rel.name}"
+            target = self.table_path / dest_rel
+            target.parent.mkdir(parents=True, exist_ok=True)
+            (staging / rel).rename(target)
+            out.append({"path": dest_rel.as_posix(), **f})
         shutil.rmtree(staging)
         return out
 
@@ -2993,7 +2869,7 @@ class TransactionLog:
                 **self._generated_constraints(state["generated"]),
             },
         )
-        cdf = self._stage_cdf(changes, mapping)
+        cdf = self._stage_files(changes, [], mapping=mapping, dest="_cdf")
         # the new watermark depends only on the staged adds and the
         # read-time state — compute it ONCE here, not inside rec():
         # _commit_rmw probes build_record(0) and re-invokes on every
@@ -3445,7 +3321,7 @@ class TransactionLog:
         changes = cdf_parts[0]
         for p in cdf_parts[1:]:
             changes = changes.unionByName(p)
-        cdf = self._stage_cdf(changes, mapping)
+        cdf = self._stage_files(changes, [], mapping=mapping, dest="_cdf")
         new_identity = (
             self._advance_identity(
                 identity, adds, spark, state, fresh_allocation=False
@@ -3552,13 +3428,20 @@ class TransactionLog:
         if mode == "dv":
             # merge-on-read: DV the preimage positions, append the
             # postimage rows — zero rewrites of the affected files
-            dv_entries = self._stage_dv(
-                hits.select(
-                    F.col("_fn").alias("file_name"),
-                    F.col("_ridx").alias("row_index"),
-                ),
-                [r.rsplit("/", 1)[-1] for r in affected],
-            )
+            # each DV entry records the basenames of the data files it
+            # covers, so rewriting ops can prune vectors whose files died
+            covered = sorted(r.rsplit("/", 1)[-1] for r in affected)
+            dv_entries = [
+                dict(e, files=covered)
+                for e in self._stage_files(
+                    hits.select(
+                        F.col("_fn").alias("file_name"),
+                        F.col("_ridx").alias("row_index"),
+                    ),
+                    [],
+                    dest="_dv",
+                )
+            ]
             base = hits.drop("_fn", "_ridx")
             set_cols = [
                 F.expr(set_exprs[c]).cast(schema[c].dataType).alias(c)
@@ -3592,14 +3475,16 @@ class TransactionLog:
                     **self._generated_constraints(gens),
                 },
             )
-            cdf = self._stage_cdf(
+            cdf = self._stage_files(
                 base.select("*", F.lit("update_preimage").alias("_change_type"))
                 .unionByName(
                     post.select(
                         "*", F.lit("update_postimage").alias("_change_type")
                     )
                 ),
-                mapping,
+                [],
+                mapping=mapping,
+                dest="_cdf",
             )
 
             def rec_dv(v: int) -> dict:
@@ -3681,7 +3566,7 @@ class TransactionLog:
         post = regen(aff_df.filter(hit).select(*updated_cols)).select(
             "*", F.lit("update_postimage").alias("_change_type")
         )
-        cdf = self._stage_cdf(pre.unionByName(post), mapping)
+        cdf = self._stage_files(pre.unionByName(post), [], mapping=mapping, dest="_cdf")
 
         def rec(v: int) -> dict:
             r = {
@@ -3748,18 +3633,27 @@ class TransactionLog:
         mapping = state["column_mapping"]
         if affected and mode == "dv":
             removes = []
-            dv_entries = self._stage_dv(
-                hits.select(
-                    F.col("_fn").alias("file_name"),
-                    F.col("_ridx").alias("row_index"),
-                ),
-                [r.rsplit("/", 1)[-1] for r in affected],
-            )
-            cdf = self._stage_cdf(
+            # each DV entry records the basenames of the data files it
+            # covers, so rewriting ops can prune vectors whose files died
+            covered = sorted(r.rsplit("/", 1)[-1] for r in affected)
+            dv_entries = [
+                dict(e, files=covered)
+                for e in self._stage_files(
+                    hits.select(
+                        F.col("_fn").alias("file_name"),
+                        F.col("_ridx").alias("row_index"),
+                    ),
+                    [],
+                    dest="_dv",
+                )
+            ]
+            cdf = self._stage_files(
                 hits.drop("_fn", "_ridx").select(
                     "*", F.lit("delete").alias("_change_type")
                 ),
-                mapping,
+                [],
+                mapping=mapping,
+                dest="_cdf",
             )
         elif affected:
             removes = sorted(affected)
@@ -3772,11 +3666,13 @@ class TransactionLog:
                 mapping=mapping,
                 bloom_index=state["bloom_index"],
             )
-            cdf = self._stage_cdf(
+            cdf = self._stage_files(
                 aff_df.filter(F.expr(predicate)).select(
                     "*", F.lit("delete").alias("_change_type")
                 ),
-                mapping,
+                [],
+                mapping=mapping,
+                dest="_cdf",
             )
 
         def rec(v: int) -> dict:
@@ -4571,37 +4467,7 @@ class TransactionLog:
         return deleted
 
 
-# ---- module-level conveniences (the functional surface) -----------------
-
-
-def txn_append(
-    df: DataFrame,
-    path: str,
-    partition_keys: list[str] | None = None,
-    evolve_schema: bool = False,
-) -> int:
-    return TransactionLog(path).append(df, partition_keys, evolve_schema)
-
-
-def txn_overwrite(
-    df: DataFrame, path: str, partition_keys: list[str] | None = None
-) -> int:
-    return TransactionLog(path).overwrite(df, partition_keys)
-
-
-def txn_compact(spark: SparkSession, path: str, **kw) -> int:
-    return TransactionLog(path).compact(spark, **kw)
-
-
-def txn_merge(
-    source: DataFrame, path: str, keys: list[str], evolve_schema: bool = False
-) -> int:
-    return TransactionLog(path).merge_upsert(source, keys, evolve_schema)
-
-
-def txn_merge_clauses(source: DataFrame, path: str, keys: list[str], **clauses) -> int:
-    """Full-clause MERGE; see :meth:`TransactionLog.merge`."""
-    return TransactionLog(path).merge(source, keys, **clauses)
+# ---- streaming sink -------------------------------------------------------
 
 
 def foreach_batch_sink(
@@ -4658,65 +4524,3 @@ def foreach_batch_sink(
 
     return sink
 
-
-def txn_restore(path: str, version: int) -> int:
-    return TransactionLog(path).restore(version)
-
-
-def txn_clone(source: str, target: str, version: int | None = None) -> int:
-    return TransactionLog(source).clone_to(target, version)
-
-
-def txn_rename_column(path: str, old: str, new: str) -> int:
-    return TransactionLog(path).rename_column(old, new)
-
-
-def txn_set_partition_spec(path: str, partition_keys: list[str]) -> int:
-    return TransactionLog(path).set_partition_spec(partition_keys)
-
-
-def txn_add_generated_column(path: str, name: str, expr: str) -> int:
-    return TransactionLog(path).add_generated_column(name, expr)
-
-
-def txn_drop_column(path: str, name: str) -> int:
-    return TransactionLog(path).drop_column(name)
-
-
-def txn_delete(spark: SparkSession, path: str, predicate: str) -> int:
-    return TransactionLog(path).delete_where(spark, predicate)
-
-
-def txn_update(
-    spark: SparkSession,
-    path: str,
-    set_exprs: dict[str, str],
-    predicate: str,
-    mode: str = "cow",
-) -> int:
-    return TransactionLog(path).update_where(spark, set_exprs, predicate, mode)
-
-
-def snapshot(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    timestamp: str | None = None,
-) -> DataFrame:
-    return TransactionLog(path).snapshot(spark, version, timestamp)
-
-
-def read_changes(
-    spark: SparkSession, path: str, from_version: int, to_version: int | None = None
-) -> DataFrame:
-    return TransactionLog(path).read_changes(spark, from_version, to_version)
-
-
-def vacuum(
-    path: str, retain_versions: int = 1, min_age_s: float = 600.0
-) -> list[str]:
-    return TransactionLog(path).vacuum(retain_versions, min_age_s=min_age_s)
-
-
-def history(path: str) -> list[CommitInfo]:
-    return TransactionLog(path).history()

@@ -14,21 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: Default for the global_ordered_scan input pin (r12, measured OFF):
-#: True = persist the input for the duration of the call so its lineage
-#: executes once instead of once per pass.  Shipped False because the
-#: "double execution" it removes reuses shuffle outputs across the
-#: sampling and checkpoint passes (Spark skips already-computed
-#: stages), so the pin buys almost nothing — while the pinned cache
-#: either executes WITHOUT AQE (canChangeCachedPlanOutputPartitioning's
-#: false default: sf10 bigram pipeline med 15.8 s -> 28.0 s) or, with
-#: that conf flipped true, starves downstream consumers of cached
-#: frames of parallelism session-wide.  Full A/B/C evidence in
-#: OPTIMIZATION_r12.md change 3; the mechanism stays (per-call
-#: ``pin_input=True``, regression-tested) for expensive-lineage callers
-#: on deployments where the cached-plan AQE conf is enabled.
-PIN_ORDERED_SCAN_INPUT = False
-
 COALESCE_TIERS: list[tuple[int, int]] = [
     (50_000_000, 8),
     (100_000_000, 16),
@@ -125,7 +110,6 @@ def global_ordered_scan(
     cumsum: dict[str, str] | None = None,
     num_partitions: int | None = None,
     cache: str = "checkpoint",
-    pin_input: bool | None = None,
 ) -> DataFrame:
     """Distributed ORDER-dependent scan primitives — exact global row
     numbers (``rn_out``) and/or running sums (``cumsum`` maps output
@@ -189,49 +173,19 @@ def global_ordered_scan(
     parts = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    # r12 (VERDICT r11 item 5): execute the input lineage ONCE.
-    # repartitionByRange SAMPLES its child to derive range bounds — a
-    # full execution of the input — and the eager checkpoint below
-    # executes it again for the shuffle.  Fix: pin the INPUT for the
-    # duration of this call only — persist, let the sampling job
-    # materialize the cache, checkpoint the shuffled frame (which
-    # reads the cache), then unpersist SYNCHRONOUSLY before returning.
-    # The only long-lived artifact stays the single localCheckpoint
-    # the helper always produced, so the ContextCleaner-owned block
-    # lifecycle is unchanged (regression-held by
-    # test_global_ordered_scan_releases_blocks); the r11 failure mode
-    # (an interposed materialization living UNDER the returned frame's
-    # plan) cannot recur because the pin is released eagerly inside
-    # the call, not left for GC.  Skip the pin when the caller already
-    # persisted the input (their cache serves both passes).
-    # pin_input=None defers to the module default; callers whose input
-    # lineage is a cheap raw scan (exact_file_chunks' write paths) pass
-    # False — re-scanning once is cheaper than materializing a cache.
-    if pin_input is None:
-        pin_input = PIN_ORDERED_SCAN_INPUT
-    pin = pin_input and cache == "checkpoint" and bool(
-        df.storageLevel is not None
-        and not (df.storageLevel.useMemory or df.storageLevel.useDisk)
+    sdf = (
+        df.repartitionByRange(parts, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_pid", F.spark_partition_id())
     )
-    if pin:
-        df = df.persist()
-    try:
-        sdf = (
-            df.repartitionByRange(parts, *order_cols)
-            .sortWithinPartitions(*order_cols)
-            .withColumn("_pid", F.spark_partition_id())
-        )
-        if cache == "checkpoint":
-            # freeze the sampled range bounds structurally: both passes
-            # read the same materialized blocks, and the blocks die with
-            # the returned frame (ContextCleaner on GC) instead of
-            # living until a session-wide clearCache
-            sdf = sdf.localCheckpoint(eager=True)
-        else:
-            sdf.persist()
-    finally:
-        if pin:
-            df.unpersist()
+    if cache == "checkpoint":
+        # freeze the sampled range bounds structurally: both passes
+        # read the same materialized blocks, and the blocks die with
+        # the returned frame (ContextCleaner on GC) instead of
+        # living until a session-wide clearCache
+        sdf = sdf.localCheckpoint(eager=True)
+    else:
+        sdf.persist()
     aggs = [F.count(F.lit(1)).alias("_cnt")] + [
         F.sum(v).alias(f"_t_{o}") for o, v in cumsum.items()
     ]
@@ -289,13 +243,11 @@ def global_row_number(
     out: str = "rn",
     num_partitions: int | None = None,
     cache: str = "checkpoint",
-    pin_input: bool | None = None,
 ) -> DataFrame:
     """EXACT global 1-based row number under a TOTAL order — see
     :func:`global_ordered_scan` (this is its ``rn_out``-only form)."""
     return global_ordered_scan(
-        df, order_cols, rn_out=out, num_partitions=num_partitions,
-        cache=cache, pin_input=pin_input,
+        df, order_cols, rn_out=out, num_partitions=num_partitions, cache=cache
     )
 
 
@@ -389,15 +341,8 @@ def exact_file_chunks(
     if rows_per_file < 1:
         raise ValueError(f"rows_per_file must be >= 1, got {rows_per_file}")
     pkeys = list(partition_keys or [])
-    # pin_input=False (r12): the chunked-write inputs are raw
-    # projections of a single parquet scan — re-executing that scan for
-    # the range-bound sampling pass is cheaper than materializing the
-    # whole frame into the block-manager cache (the pin exists for
-    # expensive post-aggregation lineages like exact_ntile's
-    # perplexity consumers).
     rn_frame = global_row_number(
-        df, [*pkeys, *order_cols], out="_efc_rn",
-        num_partitions=num_partitions, pin_input=False,
+        df, [*pkeys, *order_cols], out="_efc_rn", num_partitions=num_partitions
     )
     if pkeys:
         # O(distinct key groups) aggregate on the already-materialized

@@ -21,11 +21,9 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,73 +87,22 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-def _driver_verified_rounds() -> dict[str, int]:
-    """name -> LATEST round whose driver CORRECTNESS file holds a green
-    row for it (absent = never driver-verified).
-
-    The driver verifies only the first 50 ``queries()`` entries per round, so
-    the catalog self-rotates: entries without a green row yet sort first (see
-    ``_ordered_names``), and once a round's ``CORRECTNESS_r{N}.json`` lands in
-    the repo root they drop behind the still-unverified tail automatically.
-    """
-    root = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            rnd = int(p.stem.split("_r")[-1])
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("err") is None and row.get("rows_match"):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _driver_verified_names() -> set[str]:
-    return set(_driver_verified_rounds())
-
-
-def _ordered_names() -> list[str]:
-    """Catalog names with never-driver-verified, oracle-backed entries
-    first, then STALEST-green entries (age-based re-verification).
-
-    Sort groups (stable within each, preserving registration order):
-      0. has an oracle, no green driver row yet  — needs a CORRECTNESS row;
-      1. rows-only (no oracle), no green row     — driver records a weaker check;
-      2. already driver-verified, ordered by the round of their LATEST
-         green row ASCENDING — once every entry holds at least one
-         green row (closed as of r9), the 50-draw continuously
-         re-verifies the entries whose evidence is oldest, so a
-         regression in an early-round entry cannot hide behind an r1
-         green forever.
-    """
-    rounds = _driver_verified_rounds()
-
-    def key(e: CatalogEntry) -> tuple[int, int]:
-        if e.name in rounds:
-            return (2, rounds[e.name])
-        return (0 if e.oracle is not None else 1, 0)
-
-    return [e.name for e in sorted(_CATALOG.values(), key=key)]
-
-
 def catalog() -> dict[str, CatalogEntry]:
-    out = {name: _CATALOG[name] for name in _ordered_names()}
+    out = dict(_CATALOG)
     for e in out.values():
         e.resolved_oracle()  # lazy builders resolve once, post-import
     return out
 
 
 def queries() -> dict[str, QueryFn]:
-    return {name: _CATALOG[name].fn for name in _ordered_names()}
+    return {name: e.fn for name, e in _CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: _CATALOG[name].resolved_oracle()
-        for name in _ordered_names()
-        if _CATALOG[name].oracle is not None
+        name: e.resolved_oracle()
+        for name, e in _CATALOG.items()
+        if e.oracle is not None
     }
 
 

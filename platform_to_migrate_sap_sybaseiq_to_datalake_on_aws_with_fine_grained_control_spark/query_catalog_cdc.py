@@ -2,7 +2,7 @@
 
 Registered LAST so these brand-new entries queue behind the
 longer-waiting unverified entries in the driver's 50-slot window
-(see query_catalog._ordered_names).
+(see __spark_entry__._ordered_names).
 """
 
 from __future__ import annotations

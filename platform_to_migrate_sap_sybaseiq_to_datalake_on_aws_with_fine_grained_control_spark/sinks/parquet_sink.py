@@ -239,7 +239,9 @@ def register_external_table(
       dataset), then one ``MSCK`` to discover any partitions written
       before the table existed (once per table lifetime);
     * subsequent appends: ``ALTER TABLE ... ADD IF NOT EXISTS
-      PARTITION`` for exactly ``new_partitions`` — no full listing;
+      PARTITION`` for exactly ``new_partitions`` — no full listing
+      (an unpartitioned table only drops the session's cached
+      relation);
     * column-set drift or ``full_refresh`` (overwrite mode):
       re-create + one ``MSCK``.
 
@@ -272,7 +274,8 @@ def register_external_table(
         # catalog stores: resolving the relation (spark.table) would list
         # an unpartitioned table's files and cache that listing
         state = spark._jsparkSession.sessionState()
-        meta = state.catalog().getTableMetadata(state.sqlParser().parseTableIdentifier(qualified))
+        ident = state.sqlParser().parseTableIdentifier(qualified)
+        meta = state.catalog().getTableMetadata(ident)
         stored = StructType.fromJson(json.loads(meta.schema().json()))
 
         def name_types(fields):
@@ -280,6 +283,11 @@ def register_external_table(
 
         if name_types(stored.fields) != name_types(schema.fields):
             exists = False  # schema drift -> re-create below
+        elif not part_cols:
+            # the append registers nothing new, so a relation an earlier
+            # read resolved keeps its stale file listing: drop it (no
+            # re-listing here; the next read lists once)
+            state.catalog().invalidateCachedTable(ident)
 
     if not exists or full_refresh:
         spark.sql(f"DROP TABLE IF EXISTS {qualified}")

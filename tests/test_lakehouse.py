@@ -2602,28 +2602,127 @@ def test_merge_identity_ids_consistent_between_table_and_feed(spark, tbl):
 @pytest.mark.slow
 def test_bloom_staging_runs_executor_side(spark, tbl, monkeypatch):
     """With a declared bloom index, staging's data-proportional work
-    (re-reading the indexed column, hashing values) must run as a
+    (re-reading the indexed column, hashing values) must run as ONE
     distributed job — the driver keeps only O(files) renames.  Without
-    one, the cheap footer-only driver path still runs (no job-launch
+    one, the cheap footer-only driver harvest still runs (no job-launch
     latency on metadata-priced appends)."""
-    calls = {"distributed": 0}
-    orig = TransactionLog._stage_files_distributed
+    from pyspark import SparkContext
 
-    def spy(self, *a, **k):
-        calls["distributed"] += 1
-        return orig(self, *a, **k)
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark import (
+        lakehouse,
+    )
 
-    monkeypatch.setattr(TransactionLog, "_stage_files_distributed", spy)
     df = spark.createDataFrame([(i, f"u{i}") for i in range(100)], ["k", "s"])
+    calls = {"jobs": 0, "driver_harvests": 0}
+    orig_harvest = lakehouse._harvest
+    orig_parallelize = SparkContext.parallelize
+
+    def harvest_spy(*a):
+        # counts driver-side calls only: an executor runs a pickled copy
+        calls["driver_harvests"] += 1
+        return orig_harvest(*a)
+
+    def parallelize_spy(self, *a, **k):
+        calls["jobs"] += 1
+        return orig_parallelize(self, *a, **k)
+
+    monkeypatch.setattr(lakehouse, "_harvest", harvest_spy)
+    monkeypatch.setattr(SparkContext, "parallelize", parallelize_spy)
     tbl.append(df.coalesce(1))
-    assert calls["distributed"] == 0  # no index: footer-only driver path
+    # no index: footer-only driver harvest, no Spark job
+    assert calls == {"jobs": 0, "driver_harvests": 1}
     tbl.add_bloom_index("k")
     tbl.append(df.coalesce(1), max_records_per_file=25)
-    assert calls["distributed"] == 1
+    # index declared: one Spark job harvests all four files
+    assert calls == {"jobs": 1, "driver_harvests": 1}
     st = tbl._replay(tbl.latest_version())
     indexed = [a for a in st["files"].values() if "bloom" in a]
     assert len(indexed) == 4  # every post-declaration file carries one
     assert tbl.matching_files("k = 999999") == []
+
+
+# ---- staging contract ----------------------------------------------------
+
+#: the keys (in order) of every committed entry kind; ``bloom`` follows
+#: ``stats`` only on tables with a declared bloom index
+_ADD_KEYS = ["path", "size", "rows", "partition_values", "stats"]
+_CDF_KEYS = ["path", "size", "rows"]
+_DV_KEYS = ["path", "size", "rows", "files"]
+
+
+@pytest.mark.parametrize(
+    "op, kinds",
+    [
+        ("append", {"add"}),
+        ("merge", {"add", "cdf"}),
+        ("merge_upsert", {"add", "cdf"}),
+        ("delete_cow", {"add", "cdf"}),
+        ("delete_dv", {"cdf", "dv"}),
+        ("update", {"add", "cdf"}),
+        ("compact", {"add"}),
+    ],
+)
+def test_staging_commits_entry_contract(spark, tbl, monkeypatch, op, kinds):
+    """Every write path stages through one routine: committed add / cdf
+    / dv entries carry exactly their contract keys, and nothing staged
+    but uncommitted — a ``_staging-*`` dir or a zero-row task output —
+    is left in the table dir."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark import (
+        lakehouse,
+    )
+
+    rows = [(i, f"v{i}", "2024" if i % 2 else "2025") for i in range(8)]
+    base = spark.createDataFrame(rows, ["id", "v", "year"])
+    # unpartitioned: only a single-directory write gives an empty task
+    # its own (zero-row) file
+    tbl.append(base)
+    tbl.append(base.filter("id < 2"))
+    zero_row = []
+    orig = lakehouse._harvest
+
+    def spy(*a):
+        facts = orig(*a)
+        if facts is None:
+            zero_row.append(a[-1])
+        return facts
+
+    monkeypatch.setattr(lakehouse, "_harvest", spy)
+    src = spark.createDataFrame([(1, "new", "2024"), (99, "ins", "2025")], ["id", "v", "year"])
+    if op == "append":
+        # task 0 is empty, and Spark still writes it a zero-row file
+        tbl.append(base.repartition(4, "id").filter(F.spark_partition_id() != 0))
+    elif op == "merge":
+        tbl.merge(
+            src, ["id"],
+            when_matched=[{"action": "update", "set": "*"}],
+            when_not_matched=[{"action": "insert", "values": "*"}],
+        )
+    elif op == "merge_upsert":
+        tbl.merge_upsert(src, ["id"])
+    elif op == "delete_cow":
+        tbl.delete_where(spark, "id = 3")
+    elif op == "delete_dv":
+        tbl.delete_where(spark, "id = 3", mode="dv")
+    elif op == "update":
+        tbl.update_where(spark, {"v": "'upd'"}, "id = 3")
+    else:
+        tbl.compact(spark)
+    rec = json.loads((tbl.log_path / f"{str(tbl.latest_version()).zfill(20)}.json").read_text())
+    for kind, keys in (("add", _ADD_KEYS), ("cdf", _CDF_KEYS), ("dv", _DV_KEYS)):
+        entries = rec.get(kind) or []
+        assert bool(entries) == (kind in kinds), kind
+        assert all(list(e) == keys for e in entries), (kind, entries)
+    assert not list(tbl.table_path.glob("_staging-*"))
+    empty = [
+        f for f in tbl.table_path.rglob("*.parquet")
+        if pq.ParquetFile(f).metadata.num_rows == 0
+    ]
+    assert empty == []
+    if op == "append":
+        assert zero_row  # the case above really staged a zero-row file
 
 
 # ---- full-clause MERGE (round 7) ------------------------------------------

@@ -579,15 +579,42 @@ def test_catalog_modules_import_standalone(mod):
     assert r.returncode == 0, f"{mod} fails standalone:\n{r.stderr[-2000:]}"
 
 
+def test_package_reads_no_repo_root_artifacts():
+    """Library code must not depend on run records kept in the repo
+    root (``CORRECTNESS_r*.json``, ``BENCH_*.json``): catalog order and
+    behavior are the same wherever the package is installed.  A module
+    reaches the repo root by walking ``Path(__file__)`` up past the
+    package directory."""
+    import re
+    from pathlib import Path
+
+    import platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark as pkg_mod
+
+    pkg = Path(pkg_mod.__file__).parent
+    repo = pkg.parent
+    artifact = re.compile(r"CORRECTNESS_r|\bBENCH_")
+    walk_up = re.compile(r"__file__\)?(?:\.resolve\(\))?((?:\.parent\b)+|\.parents\[(\d+)\])")
+    bad = []
+    for mod in sorted(pkg.rglob("*.py")):
+        rel = mod.relative_to(pkg)
+        depth = len(rel.parts) - 1  # dirs between the module and pkg
+        text = mod.read_text()
+        if artifact.search(text) or str(repo) in text:
+            bad.append(str(rel))
+            continue
+        for m in walk_up.finditer(text):
+            ups = m.group(1).count(".parent") if m.group(2) is None else int(m.group(2)) + 1
+            if ups > depth + 1:
+                bad.append(f"{rel}: {m.group(0)}")
+    assert not bad, f"library code reads repo-root artifacts: {bad}"
+
+
 def test_rotation_fronts_new_then_stalest_green():
     """Driver-sample rotation: never-verified oracle entries first,
     then verified entries ordered by the round of their latest green
     row ASCENDING — with coverage closed (every entry green at least
     once, r9), the 50-draw re-verifies the stalest evidence first."""
-    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.query_catalog import (
-        _driver_verified_rounds,
-        _ordered_names,
-    )
+    from __spark_entry__ import _driver_verified_rounds, _ordered_names
 
     rounds = _driver_verified_rounds()
     names = _ordered_names()
