@@ -2045,6 +2045,25 @@ class TransactionLog:
         )
 
     @staticmethod
+    def _recompute_generated(
+        df: DataFrame, generated: dict[str, str], schema: StructType
+    ) -> DataFrame:
+        """Recompute declared generated columns from the frame's
+        (updated) source columns, projected onto ``schema``'s order."""
+        from pyspark.sql import functions as F
+
+        if not generated:
+            return df
+        return df.select(
+            *[
+                F.expr(generated[f.name]).cast(f.dataType).alias(f.name)
+                if f.name in generated
+                else F.col(f.name)
+                for f in schema.fields
+            ]
+        )
+
+    @staticmethod
     def _generated_constraints(generated: dict[str, str]) -> dict[str, str]:
         """The implicit CHECKs enforcing supplied-value fidelity."""
         return {f"_gen_{n}": f"{n} <=> ({e})" for n, e in generated.items()}
@@ -2732,185 +2751,14 @@ class TransactionLog:
     def merge_upsert(
         self, source: DataFrame, keys: list[str], evolve_schema: bool = False
     ) -> int:
-        """Copy-on-write MERGE (upsert): rows of ``source`` whose
-        ``keys`` match an existing row replace it; the rest insert.
-        One atomic commit; ONLY files containing matched keys are
-        rewritten (file pruning — untouched files stay referenced
-        as-is, so a merge touching one partition never rewrites the
-        other 10 000).
-
-        Change feeds: the commit stages a per-row CDF sidecar
-        (``_cdf/``; update_preimage / update_postimage / insert rows),
-        so :meth:`read_change_feed` delivers exact row-level changes.
-        The file-level :meth:`read_changes` still sees the whole
-        rewritten files (a superset) — use the feed for row semantics.
-        """
-        from pyspark.sql import functions as F
-
-        read_v = self.latest_version()
-        state = self._replay(read_v)
-        if state["schema"] is None:
-            return self.append(source)  # empty table: merge == insert
-        if state["generated"]:
-            source = self._apply_generated(source, state["generated"])
-        identity = state["identity"]
-        if identity:
-            supplied = [c for c in identity if c in source.columns]
-            if supplied:
-                raise ValueError(
-                    f"identity columns {supplied} are GENERATED ALWAYS — "
-                    "omit them from the merge source"
-                )
-            # matched rows RETAIN their target ids (recovered by key);
-            # unmatched rows allocate fresh ones.  Fresh values burned
-            # on matched rows leave gaps — the identity contract
-            # explicitly allows gaps, never duplicates.
-            tbl_ids = self._read_files(source.sparkSession, state).select(
-                *keys, *sorted(identity)
-            )
-            source = source.join(tbl_ids, keys, "left")
-            for c, spec in sorted(identity.items()):
-                source = source.withColumn(
-                    c,
-                    F.coalesce(
-                        F.col(c),
-                        (
-                            F.lit(spec["high"])
-                            + F.lit(spec["step"])
-                            * F.monotonically_increasing_id()
-                        ).cast("long"),
-                    ),
-                )
-            # monotonically_increasing_id is NONDETERMINISTIC across
-            # evaluations, and this plan is executed twice below (once
-            # staging the data files, once staging the CDF sidecar) —
-            # without pinning, a task retry or AQE re-plan between the
-            # two runs could commit ids to the table that differ from
-            # the ones the change feed delivers.  localCheckpoint
-            # materializes the allocation exactly once; both downstream
-            # stagings read the pinned partitions.
-            source = source.localCheckpoint()
-        part_keys = state["partition_keys"]
-        mapping = dict(state["column_mapping"])
-        existing = StructType.fromJson(state["schema"])
-        if evolve_schema:
-            from .operators.schema_evolution import align_to_schema, merge_schemas
-
-            merged = merge_schemas([existing, source.schema])
-            source = align_to_schema(source, merged)
-            mapping = self._assign_physical(
-                merged, existing, mapping, state["retired_physical"]
-            )
-            # carried-over rows must land under the same widened schema
-            state = dict(
-                state, schema=merged.jsonValue(), column_mapping=mapping
-            )
-        else:
-            if sorted(f.name.lower() for f in source.schema.fields) != sorted(
-                f.name.lower() for f in existing.fields
-            ):
-                raise ValueError(
-                    "merge source schema drift without evolve_schema=True: "
-                    f"{source.schema.simpleString()} vs {existing.simpleString()}"
-                )
-            source = source.select(*[f.name for f in existing.fields])
-
-        # equi-key read surface (skipped for schema evolution — that
-        # changes the table contract, where strict serialization is the
-        # honest answer; _commit_rmw's schema-equality gate would block
-        # the rebase anyway)
-        read_surface = (
-            None
-            if evolve_schema
-            else self._key_read_surface(source, keys, state)
-        )
-        tbl = self._read_files(
-            spark := source.sparkSession, state, with_file_info=True
-        )
-        src_keys = F.broadcast(source.select(*keys).distinct())
-        affected = self._affected_files(
-            spark, state, tbl.join(src_keys, keys, "left_semi")
-        )
-        ct = lambda s: F.lit(s).alias("_change_type")  # noqa: E731
-        if affected:
-            aff_state = dict(state, files={r: state["files"][r] for r in affected})
-            aff_df = self._read_files(spark, aff_state)
-            carried = aff_df.join(src_keys, keys, "left_anti")
-            out = carried.unionByName(source)
-            # per-row change feed: matched keys (all inside the affected
-            # files by construction) split source into updates/inserts
-            matched_keys = F.broadcast(aff_df.select(*keys).distinct())
-            changes = (
-                aff_df.join(src_keys, keys, "left_semi")
-                .select("*", ct("update_preimage"))
-                .unionByName(
-                    source.join(matched_keys, keys, "left_semi").select(
-                        "*", ct("update_postimage")
-                    )
-                )
-                .unionByName(
-                    source.join(matched_keys, keys, "left_anti").select(
-                        "*", ct("insert")
-                    )
-                )
-            )
-        else:
-            out = source
-            changes = source.select("*", ct("insert"))
-        adds = self._stage_files(
-            out, part_keys, mapping=mapping, bloom_index=state["bloom_index"]
-        )
-        self._enforce_constraints(
-            spark,
-            adds,
-            state,
-            constraints={
-                **state["constraints"],
-                **self._generated_constraints(state["generated"]),
-            },
-        )
-        cdf = self._stage_files(changes, [], mapping=mapping, dest="_cdf")
-        # the new watermark depends only on the staged adds and the
-        # read-time state — compute it ONCE here, not inside rec():
-        # _commit_rmw probes build_record(0) and re-invokes on every
-        # retry, and _advance_identity can cost a Spark aggregate when
-        # stats missed the column
-        new_identity = (
-            self._advance_identity(
-                identity, adds, spark, state, fresh_allocation=False
-            )
-            if identity
-            else None
-        )
-
-        def rec(v: int) -> dict:
-            r = {
-                "version": v,
-                "op": "merge",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
-                "schema": state["schema"],
-                "partition_keys": part_keys,
-                "add": adds,
-                "remove": sorted(affected),
-                "cdf": cdf,
-                "column_mapping": mapping,
-            }
-            if affected and state.get("dvs"):
-                r["dvs"] = self._surviving_dvs(state, sorted(affected))
-            if identity:
-                for i in range(read_v + 1, v):
-                    if self._read_commit(i).get("identity"):
-                        raise ConcurrentCommitError(
-                            f"merge to {self.table_path} raced an "
-                            f"identity allocation at v{i}; re-run"
-                        )
-                r["identity"] = new_identity
-            return r
-
-        return self._commit_rmw(
-            read_v, rec, "merge", read_files=read_surface
+        """Upsert: :meth:`merge` with ``WHEN MATCHED THEN UPDATE SET *``
+        and ``WHEN NOT MATCHED THEN INSERT *``."""
+        return self.merge(
+            source,
+            keys,
+            when_matched=[{"action": "update", "set": "*"}],
+            when_not_matched=[{"action": "insert"}],
+            evolve_schema=evolve_schema,
         )
 
     def merge(
@@ -2920,6 +2768,8 @@ class TransactionLog:
         when_matched: list[dict] | None = None,
         when_not_matched: list[dict] | None = None,
         when_not_matched_by_source: list[dict] | None = None,
+        *,
+        evolve_schema: bool = False,
     ) -> int:
         """Full-clause MERGE (the published Delta/Iceberg grammar),
         copy-on-write, ONE atomic commit:
@@ -2941,20 +2791,20 @@ class TransactionLog:
 
         SQL-standard guards: within each group every clause except the
         last must carry a condition (otherwise later clauses are dead),
-        and a source with duplicate keys matching one target row raises
-        (ambiguous MERGE).  File pruning: only files holding matched
-        keys — plus, when by-source clauses exist, files holding rows
-        their conditions could hit — are rewritten; an unconditional
+        SET/VALUES may name only table columns, and a source with
+        duplicate keys matching one target row raises (ambiguous
+        MERGE).  File pruning: only files holding matched keys — plus,
+        when by-source clauses exist, files holding rows their
+        conditions could hit — are rewritten; an unconditional
         by-source clause touches every live file by definition.  CDF
         stages exact per-clause change types (update_preimage/
         update_postimage, delete, insert), so feeds are
         clause-faithful.  Identity columns allocate for inserts and are
         retained for matched/by-source rows; generated columns
         recompute from the post-merge values; CHECK constraints
-        enforce on the staged bytes.
-
-        :meth:`merge_upsert` remains the unconditional fast path
-        (``when_matched=[{update *}], when_not_matched=[{insert *}]``).
+        enforce on the staged bytes.  ``evolve_schema=True`` widens the
+        table to the source's columns/types (carried rows backfill
+        NULL); otherwise any column-set drift raises.
         """
         from pyspark.sql import functions as F
 
@@ -2983,12 +2833,27 @@ class TransactionLog:
                         "condition — later clauses would be unreachable"
                     )
 
+        def check_targets(names: set[str]) -> None:
+            unknown = sorted(
+                k
+                for c in wm + wnm + wnmbs
+                for f in ("set", "values")
+                if isinstance(c.get(f), dict)
+                for k in c[f]
+                if k not in names
+            )
+            if unknown:
+                raise ValueError(
+                    f"SET/VALUES columns {unknown} not in {sorted(names)}"
+                )
+
         read_v = self.latest_version()
         state = self._replay(read_v)
         if state["schema"] is None:
             # empty table: only the not-matched (insert) clauses apply
             if not wnm:
                 return read_v
+            check_targets(set(source.columns))
             s = source.alias("s")
             out = None
             for c in wnm:
@@ -3009,10 +2874,15 @@ class TransactionLog:
 
         if state["generated"]:
             source = self._apply_generated(source, state["generated"])
-        schema = StructType.fromJson(state["schema"])
-        names = [f.name for f in schema.fields]
+        existing = StructType.fromJson(state["schema"])
         identity = state["identity"]
         gens = state["generated"]
+        # validated before any Spark work: evolve_schema may add the
+        # source's new columns to the table
+        check_targets(
+            {f.name for f in existing.fields}
+            | (set(source.columns) if evolve_schema else set())
+        )
         for c in wm + wnmbs:
             sets = c.get("set")
             if isinstance(sets, dict):
@@ -3046,40 +2916,74 @@ class TransactionLog:
                         ).cast("long"),
                     ),
                 )
-            # one evaluation for data files AND the CDF sidecar (the
-            # same nondeterminism pin merge_upsert carries)
+            # one evaluation for data files AND the CDF sidecar
+            # (monotonically_increasing_id is nondeterministic)
             source = source.localCheckpoint()
-        if sorted(f.name.lower() for f in source.schema.fields) != sorted(
-            f.name.lower() for f in schema.fields
-        ):
-            raise ValueError(
-                "merge source schema drift: "
-                f"{source.schema.simpleString()} vs {schema.simpleString()}"
-            )
-        source = source.select(*names)
-
         mapping = dict(state["column_mapping"])
+        if evolve_schema:
+            from .operators.schema_evolution import align_to_schema, merge_schemas
+
+            schema = merge_schemas([existing, source.schema])
+            source = align_to_schema(source, schema)
+            mapping = self._assign_physical(
+                schema, existing, mapping, state["retired_physical"]
+            )
+            # carried-over rows must land under the same widened schema
+            state = dict(state, schema=schema.jsonValue(), column_mapping=mapping)
+        else:
+            schema = existing
+            if sorted(f.name.lower() for f in source.schema.fields) != sorted(
+                f.name.lower() for f in schema.fields
+            ):
+                raise ValueError(
+                    "merge source schema drift without evolve_schema=True: "
+                    f"{source.schema.simpleString()} vs {schema.simpleString()}"
+                )
+        names = [f.name for f in schema.fields]
+        source = source.select(*names)
         part_keys = state["partition_keys"]
         # matched/not-matched decisions read the target ONLY through
         # the equi-keys, so without by-source clauses (which inspect
         # every target row by definition) the read surface narrows to
         # the source's key bounds — disjoint-key merges then commit
-        # concurrently through _commit_rmw's disjoint-rewrite rebase
+        # concurrently through _commit_rmw's disjoint-rewrite rebase.
+        # Schema evolution changes the table contract, where strict
+        # serialization is the honest answer (_commit_rmw's
+        # schema-equality gate would block the rebase anyway).
         read_surface = (
-            None if wnmbs else self._key_read_surface(source, keys, state)
+            None
+            if wnmbs or evolve_schema
+            else self._key_read_surface(source, keys, state)
         )
         tbl = self._read_files(spark, state, with_file_info=True)
-        src_keys = F.broadcast(source.select(*keys).distinct())
-        # matched-key detection (a key-pruned semi-join scan) is needed
-        # whenever matched rows are rewritten (wm) OR inserts must skip
-        # keys already present (wnm) — a pure by-source merge skips it
+        # semi/anti joins ignore duplicate build-side keys
+        src_keys = F.broadcast(source.select(*keys))
+        # matched-key detection is needed whenever matched rows are
+        # rewritten (wm) OR inserts must skip keys already present
+        # (wnm) — a pure by-source merge skips it.  One key-pruned
+        # scan yields both the matched files and, per file, the most
+        # source rows any one target row matches (the ambiguity guard).
+        # The collect is bounded by the table's FILE count.
         matched_files: set[str] = set()
         if wm or wnm:
-            matched_files = set(
-                self._affected_files(
-                    spark, state, tbl.join(src_keys, keys, "left_semi")
+            key_counts = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+            per_file = {
+                r["_fn"]: r["_n"]
+                for r in tbl.join(F.broadcast(key_counts), keys)
+                .groupBy("_fn")
+                .agg(F.max("_n").alias("_n"))
+                .collect()
+            }
+            matched_files = {
+                rel for rel in state["files"] if rel.rsplit("/", 1)[-1] in per_file
+            }
+            # >1 source row hitting one target row makes update/delete
+            # outcomes order-dependent — SQL MERGE raises
+            if wm and any(n > 1 for n in per_file.values()):
+                raise ValueError(
+                    "MERGE source has duplicate key rows matching the same "
+                    "target row — ambiguous update/delete order"
                 )
-            )
         bs_files: set[str] = set()
         if wnmbs:
             conds = [c.get("cond") for c in wnmbs]
@@ -3100,40 +3004,8 @@ class TransactionLog:
         # files rewrite only if a by-source clause drags them in
         affected = sorted((matched_files if wm else set()) | bs_files)
 
-        # ambiguity guard: >1 source row hitting one target row makes
-        # update/delete outcomes order-dependent — SQL MERGE raises
-        if wm and matched_files:
-            dup_keys = (
-                source.groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .select(*keys)
-            )
-            m_state = dict(
-                state, files={r: state["files"][r] for r in sorted(matched_files)}
-            )
-            if (
-                self._read_files(spark, m_state)
-                .join(F.broadcast(dup_keys), keys, "left_semi")
-                .limit(1)
-                .count()
-            ):
-                raise ValueError(
-                    "MERGE source has duplicate key rows matching the same "
-                    "target row — ambiguous update/delete order"
-                )
-
         def regen(df: DataFrame) -> DataFrame:
-            if not gens:
-                return df
-            return df.select(
-                *[
-                    F.expr(gens[c]).cast(schema[c].dataType).alias(c)
-                    if c in gens
-                    else F.col(c)
-                    for c in names
-                ]
-            )
+            return self._recompute_generated(df, gens, schema)
 
         ct = lambda s: F.lit(s).alias("_change_type")  # noqa: E731
 
@@ -3180,17 +3052,16 @@ class TransactionLog:
                         expr = F.when(F.col("_clause") == i, v).otherwise(expr)
                     return expr.cast(schema[col].dataType).alias(col)
 
-                survivors = joined.filter(
-                    ~F.col("_clause").isin(del_idx) if del_idx else F.lit(True)
+                m_cols = [m_value(c) for c in names]
+                survivors = (
+                    joined.filter(~F.col("_clause").isin(del_idx)) if del_idx else joined
                 )
-                out_parts.append(
-                    regen(survivors.select(*[m_value(c) for c in names]))
-                )
+                out_parts.append(regen(survivors.select(*m_cols)))
                 if upd_idx:
                     hit_u = joined.filter(F.col("_clause").isin(upd_idx))
                     cdf_parts.append(hit_u.select(*t_star, ct("update_preimage")))
                     cdf_parts.append(
-                        regen(hit_u.select(*[m_value(c) for c in names])).select(
+                        regen(hit_u.select(*m_cols)).select(
                             "*", ct("update_postimage")
                         )
                     )
@@ -3209,73 +3080,58 @@ class TransactionLog:
                 )
 
             # ---- target rows no source key matches -----------------
-            un_t = (
-                aff_df.join(src_keys, keys, "left_anti")
-                .alias("t")
-                .withColumn("_clause", clause_idx(wnmbs))
-            )
-            bs_upd = [i for i, c in enumerate(wnmbs) if c["action"] == "update"]
-            bs_del = [i for i, c in enumerate(wnmbs) if c["action"] == "delete"]
+            un_t = aff_df.join(src_keys, keys, "left_anti")
+            if not wnmbs:
+                out_parts.append(un_t)  # carried unchanged
+            else:
+                un_t = un_t.alias("t").withColumn("_clause", clause_idx(wnmbs))
+                bs_upd = [i for i, c in enumerate(wnmbs) if c["action"] == "update"]
+                bs_del = [i for i, c in enumerate(wnmbs) if c["action"] == "delete"]
 
-            def bs_value(col: str) -> "F.Column":
-                expr = F.col(f"t.{col}")
-                for i in reversed(bs_upd):
-                    sets = wnmbs[i].get("set") or {}
-                    if col in sets and col not in identity:
-                        v = F.expr(sets[col])
-                    else:
-                        v = F.col(f"t.{col}")
-                    expr = F.when(F.col("_clause") == i, v).otherwise(expr)
-                return expr.cast(schema[col].dataType).alias(col)
+                def bs_value(col: str) -> "F.Column":
+                    expr = F.col(f"t.{col}")
+                    for i in reversed(bs_upd):
+                        sets = wnmbs[i].get("set") or {}
+                        if col in sets and col not in identity:
+                            v = F.expr(sets[col])
+                        else:
+                            v = F.col(f"t.{col}")
+                        expr = F.when(F.col("_clause") == i, v).otherwise(expr)
+                    return expr.cast(schema[col].dataType).alias(col)
 
-            bs_survivors = un_t.filter(
-                ~F.col("_clause").isin(bs_del) if bs_del else F.lit(True)
-            )
-            out_parts.append(regen(bs_survivors.select(*[bs_value(c) for c in names])))
-            if bs_upd:
-                hit_b = un_t.filter(F.col("_clause").isin(bs_upd))
-                cdf_parts.append(hit_b.select(*t_star, ct("update_preimage")))
-                cdf_parts.append(
-                    regen(hit_b.select(*[bs_value(c) for c in names])).select(
-                        "*", ct("update_postimage")
-                    )
+                bs_cols = [bs_value(c) for c in names]
+                bs_survivors = (
+                    un_t.filter(~F.col("_clause").isin(bs_del)) if bs_del else un_t
                 )
-            if bs_del:
-                cdf_parts.append(
-                    un_t.filter(F.col("_clause").isin(bs_del)).select(
-                        *t_star, ct("delete")
+                out_parts.append(regen(bs_survivors.select(*bs_cols)))
+                if bs_upd:
+                    hit_b = un_t.filter(F.col("_clause").isin(bs_upd))
+                    cdf_parts.append(hit_b.select(*t_star, ct("update_preimage")))
+                    cdf_parts.append(
+                        regen(hit_b.select(*bs_cols)).select(
+                            "*", ct("update_postimage")
+                        )
                     )
-                )
+                if bs_del:
+                    cdf_parts.append(
+                        un_t.filter(F.col("_clause").isin(bs_del)).select(
+                            *t_star, ct("delete")
+                        )
+                    )
         # ---- source rows with no target match ----------------------
-        # matched keys come from the matched FILES (every matched key
-        # lives in one by construction) — a column-pruned read, never
-        # the whole table, and independent of whether those files are
-        # being rewritten (wm may be empty)
-        matched_keys = (
-            F.broadcast(
-                self._read_files(
-                    spark,
-                    dict(
-                        state,
-                        files={
-                            r: state["files"][r] for r in sorted(matched_files)
-                        },
-                    ),
-                )
-                .join(src_keys, keys, "left_semi")
-                .select(*keys)
-                .distinct()
-            )
-            if wnm and matched_files
-            else None
-        )
-        un_s = (
-            source.join(matched_keys, keys, "left_anti")
-            if matched_keys is not None
-            else source
-        ).alias("s")
         if wnm:
-            un_s = un_s.withColumn("_iclause", clause_idx(wnm))
+            un_s = source
+            if matched_files:
+                # every matched key lives in a matched FILE; with matched
+                # clauses those are all among the affected files already
+                # read, otherwise a column-pruned read of just them
+                m_df = aff_df if wm else self._read_files(
+                    spark,
+                    dict(state, files={r: state["files"][r] for r in matched_files}),
+                )
+                matched_keys = m_df.join(src_keys, keys, "left_semi").select(*keys)
+                un_s = source.join(F.broadcast(matched_keys), keys, "left_anti")
+            un_s = un_s.alias("s").withColumn("_iclause", clause_idx(wnm))
 
             def i_value(col: str, c: dict) -> "F.Column":
                 vals = c.get("values", "*")
@@ -3449,17 +3305,7 @@ class TransactionLog:
                 else F.col(c)
                 for c in names
             ]
-            if gens:
-                post = base.select(*set_cols).select(
-                    *[
-                        F.expr(gens[c]).cast(schema[c].dataType).alias(c)
-                        if c in gens
-                        else F.col(c)
-                        for c in names
-                    ]
-                )
-            else:
-                post = base.select(*set_cols)
+            post = self._recompute_generated(base.select(*set_cols), gens, schema)
             adds = self._stage_files(
                 post,
                 state["partition_keys"],
@@ -3531,20 +3377,9 @@ class TransactionLog:
             else F.col(c)
             for c, e in ((n, set_exprs.get(n)) for n in names)
         ]
-        def regen(df: DataFrame) -> DataFrame:
-            if not gens:
-                return df
-            # recompute generated columns from the updated sources
-            return df.select(
-                *[
-                    F.expr(gens[c]).cast(schema[c].dataType).alias(c)
-                    if c in gens
-                    else F.col(c)
-                    for c in names
-                ]
-            )
-
-        out = regen(aff_df.select(*updated_cols))
+        out = self._recompute_generated(
+            aff_df.select(*updated_cols), gens, schema
+        )
         adds = self._stage_files(
             out,
             state["partition_keys"],
@@ -3563,7 +3398,9 @@ class TransactionLog:
         pre = aff_df.filter(hit).select(
             "*", F.lit("update_preimage").alias("_change_type")
         )
-        post = regen(aff_df.filter(hit).select(*updated_cols)).select(
+        post = self._recompute_generated(
+            aff_df.filter(hit).select(*updated_cols), gens, schema
+        ).select(
             "*", F.lit("update_postimage").alias("_change_type")
         )
         cdf = self._stage_files(pre.unionByName(post), [], mapping=mapping, dest="_cdf")

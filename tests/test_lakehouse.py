@@ -2860,6 +2860,23 @@ def test_merge_clauses_validation_and_ambiguity(spark, tbl):
     )
     with pytest.raises(ValueError, match="ambiguous"):
         tbl.merge(dup, ["id"], when_matched=[{"action": "update", "set": "*"}])
+    with pytest.raises(ValueError, match="ambiguous"):
+        tbl.merge_upsert(dup, ["id"])
+    # SET/VALUES may only name table columns
+    with pytest.raises(ValueError, match=r"\['qtty'\]"):
+        tbl.merge(
+            dup.limit(1),
+            ["id"],
+            when_matched=[{"action": "update", "set": {"qtty": "s.qty"}}],
+        )
+    with pytest.raises(ValueError, match=r"\['stat'\]"):
+        tbl.merge(
+            dup.limit(1),
+            ["id"],
+            when_not_matched=[{"action": "insert", "values": {"stat": "'x'"}}],
+        )
+    assert tbl.latest_version() == 2  # every rejected merge left no commit
+    assert _rows(tbl.snapshot(spark))[0] == (1, 10, "open")
     # duplicate UNMATCHED keys insert twice (SQL allows it)
     dup2 = spark.createDataFrame(
         [(9, 1, "a"), (9, 2, "b")], ["id", "qty", "status"]
@@ -2871,6 +2888,11 @@ def test_merge_clauses_validation_and_ambiguity(spark, tbl):
 def test_merge_clauses_empty_table_and_noop(spark, tbl):
     src = spark.createDataFrame([(1, 10, "open"), (2, 2, "t")],
                                 ["id", "qty", "status"])
+    with pytest.raises(ValueError, match=r"\['stat'\]"):
+        tbl.merge(
+            src, ["id"],
+            when_not_matched=[{"action": "insert", "values": {"stat": "'x'"}}],
+        )
     v = tbl.merge(
         src, ["id"],
         when_not_matched=[{"cond": "s.qty >= 10", "action": "insert"}],
@@ -2884,6 +2906,11 @@ def test_merge_clauses_empty_table_and_noop(spark, tbl):
         when_matched=[{"action": "delete"}],
     )
     assert v2 == 1 and tbl.latest_version() == 1
+    # an empty upsert source follows the same rule: no commit
+    v3 = tbl.merge_upsert(
+        spark.createDataFrame([], "id BIGINT, qty BIGINT, status STRING"), ["id"]
+    )
+    assert v3 == 1 and tbl.latest_version() == 1
 
 
 @pytest.mark.slow
