@@ -70,6 +70,7 @@ import shutil
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
 from pathlib import Path
 from urllib.parse import unquote
 
@@ -166,6 +167,17 @@ class CommitInfo:
 
 def _utc_now_iso() -> str:
     return datetime.now(timezone.utc).isoformat()
+
+
+def _commit_header(version: int, op: str, data_change: bool) -> dict:
+    """The fields every commit record opens with."""
+    return {
+        "version": version,
+        "op": op,
+        "dataChange": data_change,
+        "ts": _utc_now_iso(),
+        "txn": uuid.uuid4().hex,
+    }
 
 
 def _fmt_version(v: int) -> str:
@@ -1302,22 +1314,9 @@ class TransactionLog:
                     f"cannot add CHECK {name!r} [{expr}]: {bad} existing "
                     "rows violate it"
                 )
-        cons = dict(state["constraints"], **{name: expr})
-
-        def rec(v: int) -> dict:
-            return {
-                "version": v,
-                "op": "metadata",
-                "dataChange": False,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
-                "schema": state["schema"],
-                "partition_keys": state["partition_keys"],
-                "constraints": cons,
-                "add": [],
-                "remove": [],
-            }
-
+        rec = self._constraints_record(
+            state, dict(state["constraints"], **{name: expr})
+        )
         # strict: data committed between the validation scan and this
         # commit was never checked, so losing the race must surface
         v = self.latest_version() + 1
@@ -1335,22 +1334,22 @@ class TransactionLog:
         if name not in state["constraints"]:
             raise ValueError(f"no constraint named {name!r}")
         cons = {k: v for k, v in state["constraints"].items() if k != name}
+        return self._commit_rmw(
+            read_v, self._constraints_record(state, cons), "drop_constraint"
+        )
 
-        def rec(v: int) -> dict:
-            return {
-                "version": v,
-                "op": "metadata",
-                "dataChange": False,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
-                "schema": state["schema"],
-                "partition_keys": state["partition_keys"],
-                "constraints": cons,
-                "add": [],
-                "remove": [],
-            }
-
-        return self._commit_rmw(read_v, rec, "drop_constraint")
+    @staticmethod
+    def _constraints_record(state: dict, cons: dict[str, str]):
+        """``version -> record`` for the metadata commit that sets the
+        table's CHECK constraints to ``cons``."""
+        return lambda v: {
+            **_commit_header(v, "metadata", False),
+            "schema": state["schema"],
+            "partition_keys": state["partition_keys"],
+            "constraints": cons,
+            "add": [],
+            "remove": [],
+        }
 
     # ---- restore ---------------------------------------------------------
 
@@ -1395,11 +1394,7 @@ class TransactionLog:
         ]
         removes = sorted(r for r in cur["files"] if r not in target["files"])
         rec = {
-            "version": read_v + 1,
-            "op": "restore",
-            "dataChange": True,
-            "ts": _utc_now_iso(),
-            "txn": uuid.uuid4().hex,
+            **_commit_header(read_v + 1, "restore", True),
             "schema": target["schema"],
             "partition_keys": target["partition_keys"],
             "restore_of": version,
@@ -1465,12 +1460,8 @@ class TransactionLog:
         tgt._try_commit(
             1,
             {
-                "version": 1,
-                "op": "clone",
                 # to a downstream consumer of the CLONE all rows are new
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
+                **_commit_header(1, "clone", True),
                 "schema": state["schema"],
                 "partition_keys": state["partition_keys"],
                 "constraints": state["constraints"],
@@ -1712,11 +1703,7 @@ class TransactionLog:
                 strict_spec=True,
             )
             r = {
-                "version": v,
-                "op": "publish",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
+                **_commit_header(v, "publish", True),
                 "schema": sch,
                 "partition_keys": pkeys,
                 "add": adds,
@@ -1816,11 +1803,7 @@ class TransactionLog:
         self._try_commit(
             1,
             {
-                "version": 1,
-                "op": "create",
-                "dataChange": False,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
+                **_commit_header(1, "create", False),
                 "schema": schema.jsonValue(),
                 "partition_keys": keys,
                 "constraints": dict(constraints or {}),
@@ -1962,11 +1945,7 @@ class TransactionLog:
         mapping = state["column_mapping"]
         phys = mapping.get(name, name)
         rec = {
-            "version": read_v + 1,
-            "op": "add_bloom_index",
-            "dataChange": False,
-            "ts": _utc_now_iso(),
-            "txn": uuid.uuid4().hex,
+            **_commit_header(read_v + 1, "add_bloom_index", False),
             "schema": state["schema"],
             "partition_keys": state["partition_keys"],
             "add": [],
@@ -2010,11 +1989,7 @@ class TransactionLog:
             raise ValueError(f"generated column {name!r} already declared")
         generated = dict(state["generated"], **{name: expr})
         rec = {
-            "version": read_v + 1,
-            "op": "add_generated_column",
-            "dataChange": False,
-            "ts": _utc_now_iso(),
-            "txn": uuid.uuid4().hex,
+            **_commit_header(read_v + 1, "add_generated_column", False),
             "schema": state["schema"],
             "partition_keys": state["partition_keys"],
             "add": [],
@@ -2094,11 +2069,7 @@ class TransactionLog:
         if phys_keys == state["partition_keys"]:
             raise ValueError(f"partition spec is already {partition_keys}")
         rec = {
-            "version": read_v + 1,
-            "op": "set_partition_spec",
-            "dataChange": False,
-            "ts": _utc_now_iso(),
-            "txn": uuid.uuid4().hex,
+            **_commit_header(read_v + 1, "set_partition_spec", False),
             "schema": state["schema"],
             "partition_keys": phys_keys,
             "previous_partition_keys": state["partition_keys"],
@@ -2164,11 +2135,7 @@ class TransactionLog:
             ]
         )
         rec = {
-            "version": read_v + 1,
-            "op": "rename_column",
-            "dataChange": False,
-            "ts": _utc_now_iso(),
-            "txn": uuid.uuid4().hex,
+            **_commit_header(read_v + 1, "rename_column", False),
             "schema": new_schema.jsonValue(),
             "partition_keys": state["partition_keys"],
             "rename": {"from": old, "to": new, "physical": phys},
@@ -2233,11 +2200,7 @@ class TransactionLog:
             )
         new_schema = StructType([f for f in schema.fields if f.name != name])
         rec = {
-            "version": read_v + 1,
-            "op": "drop_column",
-            "dataChange": False,
-            "ts": _utc_now_iso(),
-            "txn": uuid.uuid4().hex,
+            **_commit_header(read_v + 1, "drop_column", False),
             "schema": new_schema.jsonValue(),
             "partition_keys": state["partition_keys"],
             "drop": {"column": name, "physical": phys},
@@ -2384,11 +2347,7 @@ class TransactionLog:
                 constraints=state["constraints"],
             )
             r = {
-                "version": v,
-                "op": "append",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
+                **_commit_header(v, "append", True),
                 "schema": sch,
                 "partition_keys": pkeys,
                 "add": adds,
@@ -2645,11 +2604,7 @@ class TransactionLog:
 
         def rec(v: int) -> dict:
             return {
-                "version": v,
-                "op": "overwrite",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
+                **_commit_header(v, "overwrite", True),
                 "schema": schema_json,
                 "partition_keys": keys,
                 "add": adds,
@@ -2919,14 +2874,13 @@ class TransactionLog:
             # one evaluation for data files AND the CDF sidecar
             # (monotonically_increasing_id is nondeterministic)
             source = source.localCheckpoint()
-        mapping = dict(state["column_mapping"])
         if evolve_schema:
             from .operators.schema_evolution import align_to_schema, merge_schemas
 
             schema = merge_schemas([existing, source.schema])
             source = align_to_schema(source, schema)
             mapping = self._assign_physical(
-                schema, existing, mapping, state["retired_physical"]
+                schema, existing, state["column_mapping"], state["retired_physical"]
             )
             # carried-over rows must land under the same widened schema
             state = dict(state, schema=schema.jsonValue(), column_mapping=mapping)
@@ -2941,7 +2895,6 @@ class TransactionLog:
                 )
         names = [f.name for f in schema.fields]
         source = source.select(*names)
-        part_keys = state["partition_keys"]
         # matched/not-matched decisions read the target ONLY through
         # the equi-keys, so without by-source clauses (which inspect
         # every target row by definition) the read surface narrows to
@@ -3155,65 +3108,20 @@ class TransactionLog:
             out_parts.append(ins)
             cdf_parts.append(ins.select("*", ct("insert")))
 
-        if not out_parts:
-            return read_v  # nothing matched, nothing to insert
-        out = out_parts[0]
-        for p in out_parts[1:]:
-            out = out.unionByName(p)
-        adds = self._stage_files(
-            out, part_keys, mapping=mapping, bloom_index=state["bloom_index"]
-        )
-        if not adds and not affected:
-            return read_v  # no file rewritten, no row inserted: no-op
-        self._enforce_constraints(
+        def union(parts: list[DataFrame]) -> DataFrame | None:
+            return reduce(DataFrame.unionByName, parts) if parts else None
+
+        return self._rewrite(
             spark,
-            adds,
+            "merge",
             state,
-            constraints={
-                **state["constraints"],
-                **self._generated_constraints(gens),
-            },
-        )
-        changes = cdf_parts[0]
-        for p in cdf_parts[1:]:
-            changes = changes.unionByName(p)
-        cdf = self._stage_files(changes, [], mapping=mapping, dest="_cdf")
-        new_identity = (
-            self._advance_identity(
-                identity, adds, spark, state, fresh_allocation=False
-            )
-            if identity
-            else None
-        )
-
-        def rec(v: int) -> dict:
-            r = {
-                "version": v,
-                "op": "merge",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
-                "schema": state["schema"],
-                "partition_keys": part_keys,
-                "add": adds,
-                "remove": affected,
-                "cdf": cdf,
-                "column_mapping": mapping,
-            }
-            if affected and state.get("dvs"):
-                r["dvs"] = self._surviving_dvs(state, affected)
-            if identity:
-                for i in range(read_v + 1, v):
-                    if self._read_commit(i).get("identity"):
-                        raise ConcurrentCommitError(
-                            f"merge to {self.table_path} raced an "
-                            f"identity allocation at v{i}; re-run"
-                        )
-                r["identity"] = new_identity
-            return r
-
-        return self._commit_rmw(
-            read_v, rec, "merge", read_files=read_surface
+            read_v,
+            read_surface,
+            touched=affected,
+            data=union(out_parts),
+            cdf=union(cdf_parts),
+            enforce=True,
+            identity=identity,
         )
 
     def update_where(
@@ -3247,191 +3155,9 @@ class TransactionLog:
         (``p = p * 1.1``) — they evaluate against the PRE-update row,
         all-at-once, per SQL UPDATE semantics.  Generated columns
         cannot be SET directly (they follow their expression; SET a
-        source column and the generated value is recomputed)."""
-        from pyspark.sql import functions as F
-
-        if mode not in ("cow", "dv"):
-            raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
-        read_v = self.latest_version()
-        state = self._replay(read_v)
-        if state["schema"] is None:
-            raise ValueError(f"{self.table_path} has no commits yet")
-        schema = StructType.fromJson(state["schema"])
-        names = [f.name for f in schema.fields]
-        unknown = [c for c in set_exprs if c not in names]
-        if unknown:
-            raise ValueError(f"SET columns {unknown} not in {names}")
-        gens = state["generated"]
-        bad = [c for c in set_exprs if c in gens]
-        if bad:
-            raise ValueError(
-                f"columns {bad} are GENERATED — update their source "
-                "columns instead"
-            )
-        bad_id = [c for c in set_exprs if c in state["identity"]]
-        if bad_id:
-            raise ValueError(
-                f"columns {bad_id} are GENERATED ALWAYS AS IDENTITY — "
-                "their values are allocation-owned"
-            )
-        mapping = state["column_mapping"]
-        tbl = self._read_files(spark, state, with_file_info=True)
-        hits = tbl.filter(F.expr(predicate))
-        affected = self._affected_files(spark, state, hits)
-        if not affected:
-            # metadata no-op: nothing matched, nothing committed
-            return read_v
-        if mode == "dv":
-            # merge-on-read: DV the preimage positions, append the
-            # postimage rows — zero rewrites of the affected files
-            # each DV entry records the basenames of the data files it
-            # covers, so rewriting ops can prune vectors whose files died
-            covered = sorted(r.rsplit("/", 1)[-1] for r in affected)
-            dv_entries = [
-                dict(e, files=covered)
-                for e in self._stage_files(
-                    hits.select(
-                        F.col("_fn").alias("file_name"),
-                        F.col("_ridx").alias("row_index"),
-                    ),
-                    [],
-                    dest="_dv",
-                )
-            ]
-            base = hits.drop("_fn", "_ridx")
-            set_cols = [
-                F.expr(set_exprs[c]).cast(schema[c].dataType).alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in names
-            ]
-            post = self._recompute_generated(base.select(*set_cols), gens, schema)
-            adds = self._stage_files(
-                post,
-                state["partition_keys"],
-                mapping=mapping,
-                bloom_index=state["bloom_index"],
-            )
-            self._enforce_constraints(
-                spark,
-                adds,
-                state,
-                constraints={
-                    **state["constraints"],
-                    **self._generated_constraints(gens),
-                },
-            )
-            cdf = self._stage_files(
-                base.select("*", F.lit("update_preimage").alias("_change_type"))
-                .unionByName(
-                    post.select(
-                        "*", F.lit("update_postimage").alias("_change_type")
-                    )
-                ),
-                [],
-                mapping=mapping,
-                dest="_cdf",
-            )
-
-            def rec_dv(v: int) -> dict:
-                return {
-                    "version": v,
-                    "op": "update",
-                    "dataChange": True,
-                    "ts": _utc_now_iso(),
-                    "txn": uuid.uuid4().hex,
-                    "schema": state["schema"],
-                    "partition_keys": state["partition_keys"],
-                    "add": adds,
-                    "remove": [],
-                    "cdf": cdf,
-                    "column_mapping": mapping,
-                    "dv": dv_entries,
-                    "reader_features": sorted(
-                        state["reader_features"] | {"deletionVectors"}
-                    ),
-                }
-
-            return self._commit_rmw(
-                read_v,
-                rec_dv,
-                "update",
-                read_files={
-                    rel.rsplit("/", 1)[-1]
-                    for rel in _prune_files(
-                        state["files"], predicate, mapping
-                    )
-                },
-            )
-        aff_state = dict(state, files={r: state["files"][r] for r in affected})
-        aff_df = self._read_files(spark, aff_state)
-        hit = F.coalesce(F.expr(f"({predicate})"), F.lit(False))
-        # all SET expressions evaluate against the PRE-update row: one
-        # select applies every assignment simultaneously (SQL UPDATE
-        # semantics — `SET a = b, b = a` swaps)
-        updated_cols = [
-            F.when(hit, F.expr(e)).otherwise(F.col(c)).cast(
-                schema[c].dataType
-            ).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c, e in ((n, set_exprs.get(n)) for n in names)
-        ]
-        out = self._recompute_generated(
-            aff_df.select(*updated_cols), gens, schema
-        )
-        adds = self._stage_files(
-            out,
-            state["partition_keys"],
-            mapping=mapping,
-            bloom_index=state["bloom_index"],
-        )
-        self._enforce_constraints(
-            spark,
-            adds,
-            state,
-            constraints={
-                **state["constraints"],
-                **self._generated_constraints(gens),
-            },
-        )
-        pre = aff_df.filter(hit).select(
-            "*", F.lit("update_preimage").alias("_change_type")
-        )
-        post = self._recompute_generated(
-            aff_df.filter(hit).select(*updated_cols), gens, schema
-        ).select(
-            "*", F.lit("update_postimage").alias("_change_type")
-        )
-        cdf = self._stage_files(pre.unionByName(post), [], mapping=mapping, dest="_cdf")
-
-        def rec(v: int) -> dict:
-            r = {
-                "version": v,
-                "op": "update",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
-                "schema": state["schema"],
-                "partition_keys": state["partition_keys"],
-                "add": adds,
-                "remove": sorted(affected),
-                "cdf": cdf,
-                "column_mapping": mapping,
-            }
-            if state.get("dvs"):
-                r["dvs"] = self._surviving_dvs(state, sorted(affected))
-            return r
-
-        return self._commit_rmw(
-            read_v,
-            rec,
-            "update",
-            read_files={
-                rel.rsplit("/", 1)[-1]
-                for rel in _prune_files(state["files"], predicate, mapping)
-            },
-        )
+        source column and the generated value is recomputed).  A
+        predicate that matches no row commits nothing."""
+        return self._rewrite_where(spark, predicate, mode, set_exprs)
 
     def delete_where(
         self, spark: SparkSession, predicate: str, mode: str = "cow"
@@ -3451,7 +3177,24 @@ class TransactionLog:
         rewrite cost is deferred to the next ``compact``, which reads
         through the vectors (materializing the deletions) and drops
         them.  Both modes stage identical row-level CDF records, so
-        ``read_change_feed`` is mode-agnostic."""
+        ``read_change_feed`` is mode-agnostic.
+
+        A predicate that matches no row commits nothing: the returned
+        version is the one the delete read, and no commit file is
+        written."""
+        return self._rewrite_where(spark, predicate, mode)
+
+    def _rewrite_where(
+        self,
+        spark: SparkSession,
+        predicate: str,
+        mode: str,
+        set_exprs: dict[str, str] | None = None,
+    ) -> int:
+        """The body of :meth:`update_where` (``set_exprs`` given) and
+        :meth:`delete_where` (``None``): locate the files holding a
+        matching row, build the frames the mode needs, and commit
+        through :meth:`_rewrite`."""
         from pyspark.sql import functions as F
 
         if mode not in ("cow", "dv"):
@@ -3460,91 +3203,202 @@ class TransactionLog:
         state = self._replay(read_v)
         if state["schema"] is None:
             raise ValueError(f"{self.table_path} has no commits yet")
-        tbl = self._read_files(spark, state, with_file_info=True)
-        hits = tbl.filter(F.expr(predicate))
+        schema = StructType.fromJson(state["schema"])
+        names = [f.name for f in schema.fields]
+        if set_exprs is not None:
+            unknown = [c for c in set_exprs if c not in names]
+            if unknown:
+                raise ValueError(f"SET columns {unknown} not in {names}")
+            bad = [c for c in set_exprs if c in state["generated"]]
+            if bad:
+                raise ValueError(
+                    f"columns {bad} are GENERATED — update their source "
+                    "columns instead"
+                )
+            bad_id = [c for c in set_exprs if c in state["identity"]]
+            if bad_id:
+                raise ValueError(
+                    f"columns {bad_id} are GENERATED ALWAYS AS IDENTITY — "
+                    "their values are allocation-owned"
+                )
+
+        def set_rows(df: DataFrame, hit: "F.Column | None" = None) -> DataFrame:
+            # all SET expressions evaluate against the PRE-update row: one
+            # select applies every assignment simultaneously (SQL UPDATE
+            # semantics — `SET a = b, b = a` swaps); ``hit`` limits them
+            # to the matching rows of a whole-file rewrite
+            cols = [
+                (
+                    F.expr(set_exprs[c])
+                    if hit is None
+                    else F.when(hit, F.expr(set_exprs[c])).otherwise(F.col(c))
+                ).cast(schema[c].dataType).alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in names
+            ]
+            return self._recompute_generated(
+                df.select(*cols), state["generated"], schema
+            )
+
+        hits = self._read_files(spark, state, with_file_info=True).filter(
+            F.expr(predicate)
+        )
         affected = self._affected_files(spark, state, hits)
-        adds: list[dict] = []
-        cdf: list[dict] = []
-        dv_entries: list[dict] = []
-        removes: list[str] = []
+        frames: dict[str, DataFrame] = {}
+        if affected:
+            if mode == "dv":
+                # merge-on-read: the matching positions land as a DV and
+                # no affected file is rewritten
+                pre = hits.drop("_fn", "_ridx")
+                frames["dv"] = hits.select(
+                    F.col("_fn").alias("file_name"),
+                    F.col("_ridx").alias("row_index"),
+                )
+            else:
+                aff_df = self._read_files(
+                    spark, dict(state, files={r: state["files"][r] for r in affected})
+                )
+                hit = F.coalesce(F.expr(f"({predicate})"), F.lit(False))
+                pre = aff_df.filter(hit)
+                frames["data"] = (
+                    aff_df.filter(~hit) if set_exprs is None else set_rows(aff_df, hit)
+                )
+            if set_exprs is None:
+                frames["cdf"] = pre.select("*", F.lit("delete").alias("_change_type"))
+            else:
+                post = set_rows(pre)
+                if mode == "dv":
+                    frames["data"] = post  # post-images append as new files
+                frames["cdf"] = pre.select(
+                    "*", F.lit("update_preimage").alias("_change_type")
+                ).unionByName(
+                    post.select("*", F.lit("update_postimage").alias("_change_type"))
+                )
+        # read surface = every file whose stats admit a predicate
+        # match; lets disjoint per-partition deletes/rewrites commit
+        # concurrently instead of serializing (see _commit_rmw)
+        read_surface = {
+            rel.rsplit("/", 1)[-1]
+            for rel in _prune_files(state["files"], predicate, state["column_mapping"])
+        }
+        return self._rewrite(
+            spark,
+            "delete" if set_exprs is None else "update",
+            state,
+            read_v,
+            read_surface,
+            touched=affected,
+            enforce=set_exprs is not None,
+            **frames,
+        )
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        op: str,
+        state: dict,
+        read_v: int,
+        read_files: set[str] | None,
+        *,
+        touched: list[str],
+        data: DataFrame | None = None,
+        cdf: DataFrame | None = None,
+        dv: DataFrame | None = None,
+        enforce: bool = False,
+        identity: dict | None = None,
+    ) -> int:
+        """Stage and commit one row-level rewrite — merge, update,
+        delete or compact — read at ``read_v`` with replayed ``state``.
+
+        ``touched`` are the live files the op rewrote: the commit
+        removes them, unless ``dv`` (``file_name``/``row_index``
+        positions) is given — then they stay and the deletion vector
+        staged from ``dv`` covers them.  ``data`` stages as data files
+        and ``cdf`` (rows plus ``_change_type``) as the change-feed
+        sidecar; a ``None`` frame stages nothing.  ``enforce`` checks
+        the staged data against the CHECK and generated-column
+        constraints; ``identity`` (merge) advances the identity
+        watermarks past the staged rows.  ``read_files`` is the read
+        surface :meth:`_commit_rmw` rebases against.
+
+        The no-op rule: a rewrite that removes no file, adds no file
+        and stages no deletion vector commits nothing and returns
+        ``read_v``."""
         mapping = state["column_mapping"]
-        if affected and mode == "dv":
-            removes = []
+        removes = [] if dv is not None else sorted(touched)
+        dv_entries: list[dict] = []
+        if dv is not None:
             # each DV entry records the basenames of the data files it
             # covers, so rewriting ops can prune vectors whose files died
-            covered = sorted(r.rsplit("/", 1)[-1] for r in affected)
+            covered = sorted(r.rsplit("/", 1)[-1] for r in touched)
             dv_entries = [
                 dict(e, files=covered)
-                for e in self._stage_files(
-                    hits.select(
-                        F.col("_fn").alias("file_name"),
-                        F.col("_ridx").alias("row_index"),
-                    ),
-                    [],
-                    dest="_dv",
-                )
+                for e in self._stage_files(dv, [], dest="_dv")
             ]
-            cdf = self._stage_files(
-                hits.drop("_fn", "_ridx").select(
-                    "*", F.lit("delete").alias("_change_type")
-                ),
-                [],
-                mapping=mapping,
-                dest="_cdf",
-            )
-        elif affected:
-            removes = sorted(affected)
-            aff_state = dict(state, files={r: state["files"][r] for r in affected})
-            aff_df = self._read_files(spark, aff_state)
-            kept = aff_df.filter(F.expr(f"NOT coalesce(({predicate}), false)"))
-            adds = self._stage_files(
-                kept,
+        adds = (
+            []
+            if data is None
+            else self._stage_files(
+                data,
                 state["partition_keys"],
                 mapping=mapping,
                 bloom_index=state["bloom_index"],
             )
-            cdf = self._stage_files(
-                aff_df.filter(F.expr(predicate)).select(
-                    "*", F.lit("delete").alias("_change_type")
-                ),
-                [],
-                mapping=mapping,
-                dest="_cdf",
+        )
+        if not (adds or removes or dv_entries):
+            return read_v
+        if enforce:
+            self._enforce_constraints(
+                spark,
+                adds,
+                state,
+                constraints={
+                    **state["constraints"],
+                    **self._generated_constraints(state["generated"]),
+                },
             )
+        cdf_entries = (
+            None
+            if cdf is None
+            else self._stage_files(cdf, [], mapping=mapping, dest="_cdf")
+        )
+        new_identity = identity and self._advance_identity(
+            identity, adds, spark, state, fresh_allocation=False
+        )
 
         def rec(v: int) -> dict:
             r = {
-                "version": v,
-                "op": "delete",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
+                # a compaction moves rows between files, never changes one
+                **_commit_header(v, op, op != "compact"),
                 "schema": state["schema"],
                 "partition_keys": state["partition_keys"],
                 "add": adds,
                 "remove": removes,
-                "cdf": cdf,
-                "column_mapping": mapping,
             }
+            if cdf_entries is not None:
+                r["cdf"] = cdf_entries
+            r["column_mapping"] = mapping
             if dv_entries:
                 r["dv"] = dv_entries
                 r["reader_features"] = sorted(
                     state["reader_features"] | {"deletionVectors"}
                 )
             elif removes and state.get("dvs"):
+                # vectors still covering a surviving file stay active;
+                # the rewrite read THROUGH the rest, so they are dropped
                 r["dvs"] = self._surviving_dvs(state, removes)
+            if identity:
+                for i in range(read_v + 1, v):
+                    if self._read_commit(i).get("identity"):
+                        raise ConcurrentCommitError(
+                            f"{op} to {self.table_path} raced an "
+                            f"identity allocation at v{i}; re-run"
+                        )
+                r["identity"] = new_identity
             return r
 
-        # read surface = every file whose stats admit a predicate
-        # match; lets disjoint per-partition deletes/rewrites commit
-        # concurrently instead of serializing (see _commit_rmw)
-        read_surface = {
-            rel.rsplit("/", 1)[-1]
-            for rel in _prune_files(state["files"], predicate, mapping)
-        }
-        return self._commit_rmw(
-            read_v, rec, "delete", read_files=read_surface
-        )
+        return self._commit_rmw(read_v, rec, op, read_files=read_files)
 
     def compact(
         self,
@@ -3653,39 +3507,18 @@ class TransactionLog:
                 .repartition(*[F.col(k) for k in lkeys], F.col("_salt"))
                 .drop("_salt")
             )
-        adds = self._stage_files(
-            laid_out, keys, mapping=mapping, bloom_index=state["bloom_index"]
-        )
-        removes = sorted(files)
-
-        def rec(v: int) -> dict:
-            return {
-                "version": v,
-                "op": "compact",
-                "dataChange": False,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
-                "schema": state["schema"],
-                "partition_keys": keys,
-                "column_mapping": mapping,
-                "add": adds,
-                "remove": removes,
-                # the rewrite read THROUGH the deletion vectors, so the
-                # logical deletions of the rewritten files are now
-                # physical; vectors still covering surviving files stay
-                # active (a full compact drops them all)
-                "dvs": self._surviving_dvs(state, removes),
-            }
-
         # a compaction reads exactly the files it rewrites, so its
         # read surface IS the remove set: interleaved appends and
         # disjoint rewrites (another partition's OPTIMIZE/DELETE)
         # rebase instead of forcing a re-run (see _commit_rmw)
-        return self._commit_rmw(
-            read_v,
-            rec,
+        return self._rewrite(
+            spark,
             "compact",
-            read_files={r.rsplit("/", 1)[-1] for r in removes},
+            state,
+            read_v,
+            {r.rsplit("/", 1)[-1] for r in files},
+            touched=list(files),
+            data=laid_out,
         )
 
     # ---- read path ---------------------------------------------------------

@@ -62,7 +62,7 @@ from pyspark.sql.types import StructType
 from ..lakehouse import (
     TransactionLog,
     _collect_file_stats,
-    _utc_now_iso,
+    _commit_header,
 )
 
 
@@ -661,11 +661,7 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
                 -1, v, schema_json, keys=self.partition_keys
             )
             r = {
-                "version": v,
-                "op": "append",
-                "dataChange": True,
-                "ts": _utc_now_iso(),
-                "txn": uuid.uuid4().hex,
+                **_commit_header(v, "append", True),
                 "schema": sch,
                 "partition_keys": pkeys,
                 "add": adds,

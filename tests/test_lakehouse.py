@@ -389,10 +389,15 @@ def test_delete_where_semantics_and_pruning(spark, tbl):
 
 
 def test_delete_nothing_matches_is_metadata_noop(spark, tbl):
-    tbl.append(_df(spark, [(1, "a", "2024")]), ["year"])
-    v = tbl.delete_where(spark, "id = 999")
-    rec = tbl._read_commit(v)
-    assert rec["remove"] == [] and rec["add"] == []
+    """A delete that matches no row commits nothing: the version holds
+    and no commit file is written (the same rule as update and merge)."""
+    v0 = tbl.append(_df(spark, [(1, "a", "2024")]), ["year"])
+    before = tbl._replay(v0)
+    for mode in ("cow", "dv"):
+        assert tbl.delete_where(spark, "id = 999", mode=mode) == v0
+    assert tbl.latest_version() == v0
+    assert not tbl._commit_file(v0 + 1).exists()
+    assert tbl._replay(v0) == before
     assert _ids(tbl.snapshot(spark)) == [1]
 
 
@@ -2648,6 +2653,19 @@ def test_bloom_staging_runs_executor_side(spark, tbl, monkeypatch):
 _ADD_KEYS = ["path", "size", "rows", "partition_values", "stats"]
 _CDF_KEYS = ["path", "size", "rows"]
 _DV_KEYS = ["path", "size", "rows", "files"]
+#: top-level keys of a row-level rewrite commit on a table without
+#: live deletion vectors (``dvs`` joins them only when the read state
+#: has some)
+_REWRITE_KEYS = {
+    "version", "op", "dataChange", "ts", "txn", "schema",
+    "partition_keys", "add", "remove", "cdf", "column_mapping",
+}
+_TOP_KEYS = {
+    "append": _REWRITE_KEYS - {"cdf"} | {"retired_physical"},
+    "delete_dv": _REWRITE_KEYS | {"dv", "reader_features"},
+    "update_dv": _REWRITE_KEYS | {"dv", "reader_features"},
+    "compact": _REWRITE_KEYS - {"cdf"},
+}
 
 
 @pytest.mark.parametrize(
@@ -2660,13 +2678,15 @@ _DV_KEYS = ["path", "size", "rows", "files"]
         ("delete_dv", {"cdf", "dv"}),
         ("update", {"add", "cdf"}),
         ("compact", {"add"}),
+        ("update_dv", {"add", "cdf", "dv"}),
     ],
 )
 def test_staging_commits_entry_contract(spark, tbl, monkeypatch, op, kinds):
     """Every write path stages through one routine: committed add / cdf
-    / dv entries carry exactly their contract keys, and nothing staged
-    but uncommitted — a ``_staging-*`` dir or a zero-row task output —
-    is left in the table dir."""
+    / dv entries carry exactly their contract keys, the commit record
+    exactly its top-level keys, and nothing staged but uncommitted — a
+    ``_staging-*`` dir or a zero-row task output — is left in the table
+    dir."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
@@ -2708,9 +2728,13 @@ def test_staging_commits_entry_contract(spark, tbl, monkeypatch, op, kinds):
         tbl.delete_where(spark, "id = 3", mode="dv")
     elif op == "update":
         tbl.update_where(spark, {"v": "'upd'"}, "id = 3")
+    elif op == "update_dv":
+        tbl.update_where(spark, {"v": "'upd'"}, "id = 3", mode="dv")
     else:
         tbl.compact(spark)
     rec = json.loads((tbl.log_path / f"{str(tbl.latest_version()).zfill(20)}.json").read_text())
+    top = _TOP_KEYS.get(op, _REWRITE_KEYS)
+    assert set(rec) == top, sorted(set(rec) ^ top)
     for kind, keys in (("add", _ADD_KEYS), ("cdf", _CDF_KEYS), ("dv", _DV_KEYS)):
         entries = rec.get(kind) or []
         assert bool(entries) == (kind in kinds), kind
@@ -2723,6 +2747,72 @@ def test_staging_commits_entry_contract(spark, tbl, monkeypatch, op, kinds):
     assert empty == []
     if op == "append":
         assert zero_row  # the case above really staged a zero-row file
+
+
+# ---- Spark-job budget ------------------------------------------------------
+
+#: Spark jobs each operation may run on the fixed 60-row table below
+#: (8 shuffle partitions, the test session's config).  At this size a
+#: commit's cost is its job count, not its rows: a rise fails here.
+_JOB_BUDGET = {
+    "append": 1,
+    "merge_upsert": 15,
+    "update_cow": 4,
+    "update_dv": 5,
+    "delete_cow": 4,
+    "delete_dv": 4,
+    "compact": 2,
+    "update_cow_checked": 6,
+}
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group once the
+    listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("op", sorted(_JOB_BUDGET))
+def test_lakehouse_op_spark_job_budget(spark, tbl, op):
+    schema = "id long, v string, p double, year string"
+    rows = [(i, f"v{i}", i * 1.5, "2024" if i % 2 else "2025") for i in range(60)]
+    tbl.append(spark.createDataFrame(rows[:30], schema), ["year"])
+    tbl.append(spark.createDataFrame(rows[30:], schema))
+    if op == "update_cow_checked":
+        tbl.add_check_constraint(spark, "p_nonneg", "p >= 0")
+    src = spark.createDataFrame(
+        [(5, "up5", 0.5, "2024"), (40, "up40", 4.0, "2025"), (100, "ins", 1.0, "2024")],
+        schema,
+    )
+    run = {
+        "append": lambda: tbl.append(spark.createDataFrame(rows[:5], schema)),
+        "merge_upsert": lambda: tbl.merge_upsert(src, ["id"]),
+        "update_cow": lambda: tbl.update_where(spark, {"v": "'upd'"}, "id = 7"),
+        "update_dv": lambda: tbl.update_where(
+            spark, {"v": "'upd'"}, "id = 7", mode="dv"
+        ),
+        "delete_cow": lambda: tbl.delete_where(spark, "id = 7"),
+        "delete_dv": lambda: tbl.delete_where(spark, "id = 7", mode="dv"),
+        "compact": lambda: tbl.compact(spark),
+        "update_cow_checked": lambda: tbl.update_where(
+            spark, {"p": "p + 1"}, "id = 7"
+        ),
+    }[op]
+    v0 = tbl.latest_version()
+    jobs = _count_jobs(spark, run)
+    assert tbl.latest_version() == v0 + 1  # the op really committed
+    assert jobs <= _JOB_BUDGET[op], f"{op} ran {jobs} Spark jobs"
 
 
 # ---- full-clause MERGE (round 7) ------------------------------------------
