@@ -7,6 +7,13 @@ Lambda → Step Functions → Glue → Lambda:
     cleaning pipeline → partitioned parquet + catalog sink →
     ledger updates → reconciliation → notification.
 
+``run_incremental`` is not a second pipeline but a watermark mode of
+that one run path (``Engine._run``; an extension beyond the
+reference's append-only full slices): it extracts only the rows past
+the ledger-stored high watermark, always appends, and advances the
+watermark after a successful write — with the same ledger lifecycle,
+failure routing, reconciliation and notification as ``run_job``.
+
 Scale notes (100 TB):
 
 * ``count_strategy="cache"`` reproduces the reference's
@@ -23,6 +30,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import posixpath
+import threading
 import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -50,11 +59,11 @@ class RunResult:
     execution_hash_id: str
     source_table: str
     status: str
-    row_count: int | None
-    reconcile_status: str | None
-    sink: SinkResult | None
-    final_schema: str | None
-    execution_time_s: float
+    row_count: int | None = None
+    reconcile_status: str | None = None
+    sink: SinkResult | None = None
+    final_schema: str | None = None
+    execution_time_s: float = 0.0
     error: str | None = None
     details: dict[str, Any] = field(default_factory=dict)
 
@@ -115,22 +124,17 @@ class Engine:
         # — the transaction log's OCC is the arbitration.  Lives HERE,
         # not in the orchestrator, so every direct run_job caller is
         # protected too.
-        import threading as _threading
-
-        self._sink_locks: dict[str, _threading.Lock] = {}
-        self._sink_locks_guard = _threading.Lock()
+        self._sink_locks: dict[str, threading.Lock] = {}
+        self._sink_locks_guard = threading.Lock()
 
     def _sink_lock(self, path_suffix: str):
-        import posixpath
-        import threading as _threading
-
         # normalize before keying: 'a/b', 'a/b/' and './a/b' address
         # the same physical directory and must share ONE lock — two
         # differently-spelled suffixes with distinct locks would bypass
         # the FileOutputCommitter serialization this exists to provide
         key = posixpath.normpath(path_suffix.strip()) if path_suffix else ""
         with self._sink_locks_guard:
-            return self._sink_locks.setdefault(key, _threading.Lock())
+            return self._sink_locks.setdefault(key, threading.Lock())
 
     # ------------------------------------------------------------------
 
@@ -202,16 +206,8 @@ class Engine:
             "issues": [],
         }
         try:
-            df = self.build_query_df(job)
-            cleaned, partition_keys = clean_pipeline(
-                df,
-                execution_hash_id=job.execution_hash_id,
-                load_timestamp=datetime.now(timezone.utc).replace(tzinfo=None),
-                partition_column=(
-                    job.column_for_partitioning_on_s3
-                    if job.partitioned_sink
-                    else None
-                ),
+            df, cleaned, partition_keys = self._prepare(
+                job, datetime.now(timezone.utc).replace(tzinfo=None)
             )
             buf = io.StringIO()
             with redirect_stdout(buf):
@@ -233,8 +229,7 @@ class Engine:
                     )
             if not job.reconciliation_enabled:
                 out["issues"].append(
-                    "no ExpectedAmountOfRecords — reconciliation will be "
-                    "'skipped'"
+                    "no ExpectedAmountOfRecords — reconciliation will be 'skipped'"
                 )
         except Exception as e:  # noqa: BLE001 — validator reports, not raises
             out["status"] = "INVALID"
@@ -278,10 +273,10 @@ class Engine:
                         self.spark,
                         min_files=self.config.acid_autocompact_files,
                     )
-                except ValueError:
-                    pass  # nothing over threshold — the common case
-                except ConcurrentCommitError:
-                    pass  # lost the race to a writer; next run retries
+                except (ValueError, ConcurrentCommitError):
+                    # nothing over threshold (the common case), or lost
+                    # the race to a writer: the next run retries
+                    pass
             return SinkResult(
                 path=path,
                 table=None,  # see EngineConfig.acid: metastore skipped
@@ -306,25 +301,77 @@ class Engine:
             )
 
     def run_job(self, job: ExtractionJob) -> RunResult:
+        return self._run(job)
+
+    def run_incremental(self, job: ExtractionJob, watermark_column: str) -> RunResult:
+        """``run_job`` in watermark mode: only the rows whose
+        ``watermark_column`` is past the ledger-stored high watermark
+        are extracted, and the watermark advances to the batch max."""
+        return self._run(job, watermark_column)
+
+    def last_watermark(self, job: ExtractionJob) -> str | None:
+        if self.ledger is None:
+            return None
+        item = self.ledger.get(_wm_key(job), job.source_table)
+        return item.get("HighWatermark") if item else None
+
+    def _prepare(
+        self,
+        job: ExtractionJob,
+        load_ts: datetime,
+        watermark_column: str | None = None,
+        last: str | None = None,
+        observation: Observation | None = None,
+    ) -> tuple[DataFrame, DataFrame, list[str]]:
+        """Query frame -> cleaned frame, the prefix ``_run`` and
+        ``validate_job`` share; returns ``(query_df, cleaned, keys)``.
+
+        The run's one ``observation`` sits on the query frame: cleaning
+        keeps every row, and the watermark max must be the native,
+        untrimmed value the next run's filter compares against.
+        """
+        df = self.build_query_df(job)
+        if watermark_column and last is not None:
+            # the ledger stores the watermark as a string; compare in the
+            # column's NATIVE type (lexicographically '9' > '10')
+            wm_type = df.schema[watermark_column].dataType
+            df = df.filter(F.col(watermark_column) > F.lit(last).cast(wm_type))
+        if observation is not None:
+            aggs = [F.count(F.lit(1)).alias("n")]
+            if watermark_column:
+                aggs.append(F.max(F.col(watermark_column)).alias("wm"))
+            df = df.observe(observation, *aggs)
+        cleaned, partition_keys = clean_pipeline(
+            df,
+            execution_hash_id=job.execution_hash_id,
+            load_timestamp=load_ts,
+            partition_column=job.column_for_partitioning_on_s3 if job.partitioned_sink else None,
+        )
+        return df, cleaned, partition_keys
+
+    def _run(self, job: ExtractionJob, watermark_column: str | None = None) -> RunResult:
+        """The one body of every plan-job run: ledger lifecycle, query,
+        clean, count, write, reconcile and notification, with
+        ``watermark_column`` selecting the incremental mode."""
         hash_id = job.execution_hash_id
         t0 = time.time()
         if self.ledger:
             self.ledger.update_item(hash_id, job.source_table, GlueJobStartTimestamp=utc_now_str())
         load_ts = datetime.now(timezone.utc).replace(tzinfo=None)
+        details: dict[str, Any] = {}
 
         try:
-            df = self.build_query_df(job)
-            cleaned, partition_keys = clean_pipeline(
-                df,
-                execution_hash_id=hash_id,
-                load_timestamp=load_ts,
-                partition_column=(
-                    job.column_for_partitioning_on_s3 if job.partitioned_sink else None
-                ),
+            last = self.last_watermark(job) if watermark_column else None
+            strategy = self.config.count_strategy
+            # one single-pass observation: the row count under "observe",
+            # plus the batch's watermark max in incremental mode
+            observe = strategy == "observe" or watermark_column
+            observation = Observation(f"rows_{hash_id[:8]}") if observe else None
+            _, cleaned, partition_keys = self._prepare(
+                job, load_ts, watermark_column, last, observation
             )
             final_schema = schema_tree_string(cleaned)
 
-            observation: Observation | None = None
             row_count: int | None = None
             cached: DataFrame | None = None
             # adaptive sizing bounds file size per WRITE (never via a
@@ -332,7 +379,7 @@ class Engine:
             # tiered mode must not set it or the coalesce(n) file
             # counts would be re-split past the tier boundary.
             max_rpf: int | None = 5_000_000
-            if self.config.count_strategy == "cache":
+            if strategy == "cache":
                 # reference parity: cache + count before the write
                 # (sybaseiq_extractor.py:295-297)
                 cached = cleaned.cache()
@@ -340,36 +387,27 @@ class Engine:
                 cleaned = apply_output_sizing(cached, row_count, mode=self.config.output_sizing)
                 if self.config.output_sizing == "tiered":
                     max_rpf = None
-            elif self.config.count_strategy == "observe":
-                observation = Observation(f"rows_{hash_id[:8]}")
-                cleaned = cleaned.observe(observation, F.count(F.lit(1)).alias("n"))
-                # DOCUMENTED fallback, not an oversight: tiered sizing
-                # needs the pre-write row count, which observe learns
-                # only AFTER the write — so under observe the sizing is
-                # always adaptive (AQE coalesce), whatever
-                # output_sizing says.  Exact reference-parity file
-                # counts require count_strategy='cache' (see
-                # EngineConfig docstring).
-                cleaned = apply_output_sizing(cleaned, 0, mode="adaptive")
+            # otherwise sizing is always adaptive (AQE coalesce): tiered
+            # sizing needs the PRE-write count, which observe learns only
+            # after the write (EngineConfig.output_sizing)
 
             try:
                 sink = self._write_sink(
                     cleaned,
                     job,
                     partition_keys,
-                    mode=self.config.sink_mode,
+                    # an incremental overwrite would drop earlier increments
+                    mode="append" if watermark_column else self.config.sink_mode,
                     max_records_per_file=max_rpf,
                 )
                 if observation is not None:
-                    row_count = int(observation.get["n"])
+                    metrics = observation.get
+                    row_count = int(metrics["n"])
             finally:
                 if cached is not None:
-                    # unpersist the exact DataFrame that was cached —
-                    # `cleaned` may have been rebound to the coalesced
-                    # plan by sizing.  In a finally: a failed write must
-                    # not leave the multi-TB extract pinned in storage
-                    # memory for the rest of a sequential chain (the
-                    # orchestrator deliberately continues past failures).
+                    # the exact DataFrame cached (sizing may have rebound
+                    # `cleaned`); in a finally, so a failed write does not
+                    # leave the extract pinned for the rest of a chain
                     cached.unpersist()
 
             if sink.table and self.config.post_write_analyze:
@@ -377,48 +415,42 @@ class Engine:
 
                 post_write_maintenance(self.spark, sink.table)
 
-            if self.ledger:
-                self.ledger.update_item(
-                    hash_id,
-                    job.source_table,
-                    GlueAmountOfRecords=row_count,
-                    GlueJobEndTimestamp=utc_now_str(),
-                    GlueFinalTableSchema=final_schema,
-                    GlueJobFinalStatus="SUCCEEDED",
-                    ExecutionTime=int(time.time() - t0),
-                )
+            if watermark_column:
+                wm = metrics["wm"]  # native type; stringified to store
+                new_wm = last if wm is None else str(wm)  # None: no new rows
+                if self.ledger and wm is not None:
+                    self.ledger.put_item(
+                        {
+                            "ExecutionHashId": _wm_key(job),
+                            "SourceTable": job.source_table,
+                            "HighWatermark": new_wm,
+                        }
+                    )
+                details = {"last_watermark": last, "new_watermark": new_wm}
 
-            reconcile = reconcile_counts(job.expected_amount_of_records, row_count)
             result = RunResult(
                 execution_hash_id=hash_id,
                 source_table=job.source_table,
                 status="SUCCEEDED",
                 row_count=row_count,
-                reconcile_status=reconcile,
+                reconcile_status=reconcile_counts(job.expected_amount_of_records, row_count),
                 sink=sink,
                 final_schema=final_schema,
-                execution_time_s=time.time() - t0,
+                details=details,
             )
+            end = {"GlueAmountOfRecords": row_count, "GlueFinalTableSchema": final_schema}
         except Exception as e:  # noqa: BLE001 — C4 failure routing
-            if self.ledger:
-                self.ledger.update_item(
-                    hash_id,
-                    job.source_table,
-                    GlueJobFinalStatus="FAILED",
-                    ErrorMessage=str(e)[:2000],
-                    GlueJobEndTimestamp=utc_now_str(),
-                    ExecutionTime=int(time.time() - t0),
-                )
-            result = RunResult(
-                execution_hash_id=hash_id,
-                source_table=job.source_table,
-                status="FAILED",
-                row_count=None,
-                reconcile_status=None,
-                sink=None,
-                final_schema=None,
-                execution_time_s=time.time() - t0,
-                error=str(e),
+            result = RunResult(hash_id, job.source_table, "FAILED", error=str(e))
+            end = {"ErrorMessage": str(e)[:2000]}
+        result.execution_time_s = time.time() - t0
+        if self.ledger:
+            self.ledger.update_item(
+                hash_id,
+                job.source_table,
+                GlueJobFinalStatus=result.status,
+                GlueJobEndTimestamp=utc_now_str(),
+                ExecutionTime=int(result.execution_time_s),
+                **end,
             )
 
         if self.notifications:
@@ -442,83 +474,6 @@ class Engine:
         return result
 
 
-# ---------------------------------------------------------------------
-# Incremental extraction (extension beyond the reference's append-only
-# full-slice model): extract only rows past the last high watermark.
-# ---------------------------------------------------------------------
-
-
 def _wm_key(job: ExtractionJob) -> str:
+    """Ledger key of the ``(source, table)`` high-watermark row."""
     return f"IncrementalWatermark-{job.source_name}-{job.source_table}"
-
-
-class IncrementalMixin:
-    """Watermark-column incremental runs, ledger-backed.
-
-    The high watermark for ``(source, table)`` lives in the ledger as a
-    dedicated row; each run filters ``watermark_column > last`` and
-    advances the stored watermark to the batch max — collected via the
-    same single-pass ``observe`` used for row counts, so incremental
-    costs one scan exactly like a full run.
-    """
-
-    def last_watermark(self, job: ExtractionJob) -> str | None:
-        if self.ledger is None:
-            return None
-        item = self.ledger.get(_wm_key(job), job.source_table)
-        return item.get("HighWatermark") if item else None
-
-    def run_incremental(self, job: ExtractionJob, watermark_column: str) -> RunResult:
-        last = self.last_watermark(job)
-        base_df = self.build_query_df(job)
-        wm_type = base_df.schema[watermark_column].dataType
-        if last is not None:
-            # The ledger stores the watermark as a string; compare in the
-            # column's NATIVE type (a lexicographic compare would regress
-            # numeric watermarks: '9' > '10').
-            base_df = base_df.filter(
-                F.col(watermark_column) > F.lit(last).cast(wm_type)
-            )
-
-        obs = Observation(f"inc_{job.execution_hash_id[:8]}")
-        observed = base_df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            # max in the native type; stringified only at ledger-store time
-            F.max(F.col(watermark_column)).alias("wm"),
-        )
-
-        cleaned, partition_keys = clean_pipeline(
-            observed,
-            execution_hash_id=job.execution_hash_id,
-            partition_column=(
-                job.column_for_partitioning_on_s3 if job.partitioned_sink else None
-            ),
-        )
-        sink = self._write_sink(cleaned, job, partition_keys, mode="append")
-        row_count = int(obs.get["n"])
-        new_wm = obs.get["wm"]
-        if self.ledger is not None and row_count > 0 and new_wm is not None:
-            self.ledger.put_item(
-                {
-                    "ExecutionHashId": _wm_key(job),
-                    "SourceTable": job.source_table,
-                    "HighWatermark": str(new_wm),
-                }
-            )
-        return RunResult(
-            execution_hash_id=job.execution_hash_id,
-            source_table=job.source_table,
-            status="SUCCEEDED",
-            row_count=row_count,
-            reconcile_status=None,
-            sink=sink,
-            final_schema=None,
-            execution_time_s=0.0,
-            details={"last_watermark": last, "new_watermark": str(new_wm) if new_wm is not None else last},
-        )
-
-
-# graft the mixin methods onto Engine (single public class)
-Engine.last_watermark = IncrementalMixin.last_watermark
-Engine.run_incremental = IncrementalMixin.run_incremental

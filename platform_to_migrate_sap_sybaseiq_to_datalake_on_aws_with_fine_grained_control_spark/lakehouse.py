@@ -3241,10 +3241,14 @@ class TransactionLog:
                 df.select(*cols), state["generated"], schema
             )
 
-        hits = self._read_files(spark, state, with_file_info=True).filter(
-            F.expr(predicate)
-        )
-        affected = self._affected_files(spark, state, hits)
+        # only files whose stats admit a match can hold one: the locate
+        # scan reads them alone (none: no scan), and they are the read
+        # surface below
+        pruned = _prune_files(state["files"], predicate, state["column_mapping"])
+        hits = self._read_files(
+            spark, dict(state, files=pruned), with_file_info=True
+        ).filter(F.expr(predicate))
+        affected = self._affected_files(spark, state, hits) if pruned else []
         frames: dict[str, DataFrame] = {}
         if affected:
             if mode == "dv":
@@ -3275,13 +3279,10 @@ class TransactionLog:
                 ).unionByName(
                     post.select("*", F.lit("update_postimage").alias("_change_type"))
                 )
-        # read surface = every file whose stats admit a predicate
-        # match; lets disjoint per-partition deletes/rewrites commit
-        # concurrently instead of serializing (see _commit_rmw)
-        read_surface = {
-            rel.rsplit("/", 1)[-1]
-            for rel in _prune_files(state["files"], predicate, state["column_mapping"])
-        }
+        # read surface = the pruned files; lets disjoint per-partition
+        # deletes/rewrites commit concurrently instead of serializing
+        # (see _commit_rmw)
+        read_surface = {rel.rsplit("/", 1)[-1] for rel in pruned}
         return self._rewrite(
             spark,
             "delete" if set_exprs is None else "update",

@@ -77,6 +77,23 @@ def _existing_data_schema(spark: SparkSession, path: str, keys: list[str]):
     return StructType([f for f in sch.fields if f.name.lower() not in lk])
 
 
+def _widened_schema(df: DataFrame, path: str, keys: list[str]):
+    """The widened merge of the data schema already at ``path`` and
+    ``df``'s data columns, followed by ``df``'s partition-key fields;
+    None when nothing is there yet."""
+    from pyspark.sql.types import StructType
+
+    from ..operators.schema_evolution import merge_schemas
+
+    existing = _existing_data_schema(df.sparkSession, path, keys)
+    if existing is None:
+        return None
+    lk = {k.lower() for k in keys}
+    data = [f for f in df.schema.fields if f.name.lower() not in lk]
+    merged = merge_schemas([existing, StructType(data)])
+    return StructType(merged.fields + [f for f in df.schema.fields if f.name.lower() in lk])
+
+
 def _write_schema_sidecar(path: str, schema) -> None:
     import json
 
@@ -114,26 +131,13 @@ def write_partitioned_parquet(
     path = str(Path(root) / path_suffix)
     keys = partition_keys or []
 
-    if evolve_schema and mode == "append":
-        from pyspark.sql.types import StructType
+    evolving = evolve_schema and mode == "append"
+    if evolving:
+        from ..operators.schema_evolution import align_to_schema
 
-        from ..operators.schema_evolution import align_to_schema, merge_schemas
-
-        existing = _existing_data_schema(df.sparkSession, path, keys)
-        if existing is not None:
-            lk = {k.lower() for k in keys}
-            new_data = StructType(
-                [f for f in df.schema.fields if f.name.lower() not in lk]
-            )
-            merged = merge_schemas([existing, new_data])
-            target = StructType(
-                merged.fields
-                + [f for f in df.schema.fields if f.name.lower() in lk]
-            )
+        target = _widened_schema(df, path, keys)
+        if target is not None:
             df = align_to_schema(df, target)
-        _write_schema_sidecar_after = True
-    else:
-        _write_schema_sidecar_after = False
 
     to_write = df
     obs = None
@@ -158,7 +162,7 @@ def write_partitioned_parquet(
     # directory, sidecar included, before laying down the new files
     had_sidecar = (Path(path) / _SCHEMA_SIDECAR).exists()
     writer.save(path)
-    if _write_schema_sidecar_after:
+    if evolving:
         _write_schema_sidecar(path, df.schema)
     elif mode == "overwrite" and had_sidecar:
         # A sidecar written by prior evolving appends would otherwise
@@ -177,23 +181,7 @@ def write_partitioned_parquet(
             # Partitions NOT touched by this write survive with their
             # old schema, so the honest dataset schema is the widened
             # merge of the stale sidecar and the overwriting frame.
-            from pyspark.sql.types import StructType
-
-            from ..operators.schema_evolution import merge_schemas
-
-            existing = _existing_data_schema(df.sparkSession, path, keys)
-            lk = {k.lower() for k in keys}
-            new_data = StructType(
-                [f for f in df.schema.fields if f.name.lower() not in lk]
-            )
-            merged = merge_schemas([existing, new_data])
-            _write_schema_sidecar(
-                path,
-                StructType(
-                    merged.fields
-                    + [f for f in df.schema.fields if f.name.lower() in lk]
-                ),
-            )
+            _write_schema_sidecar(path, _widened_schema(df, path, keys))
         else:
             # Static overwrite replaces the whole dataset: the frame's
             # own schema IS the dataset schema now.

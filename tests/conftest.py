@@ -8,6 +8,11 @@ import pytest
 
 REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO_ROOT))
+# bound the test JVM's heap: under the session factory's production
+# default (48g) the heap of one long Tier-1 session grew to 15 GB RSS
+# and was OOM-killed on a 15 GB host; the suite passes at 4g (peak RSS
+# 3.6 GB), so 8g leaves twice that
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
 
 TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMALL = f"{TESTDATA_ROOT}/sf0.001"

@@ -883,7 +883,11 @@ def test_log_state_machine_random_ops(spark, tmp_path):
                 if not model:
                     continue
                 mode = "dv" if op == "delete_dv" else "cow"
+                before = t.latest_version()
                 v = t.delete_where(spark, f"id % {arg} = 0", mode=mode)
+                if not any(k % arg == 0 for k in model):
+                    assert v == before  # zero-match deletes commit nothing
+                    continue
                 for k in [k for k in model if k % arg == 0]:
                     del model[k]
             elif op in ("update", "update_dv"):
@@ -2763,6 +2767,9 @@ _JOB_BUDGET = {
     "delete_dv": 4,
     "compact": 2,
     "update_cow_checked": 6,
+    # a predicate the file stats exclude everywhere scans no file
+    "delete_cow_miss": 0,
+    "delete_dv_miss": 0,
 }
 
 
@@ -2804,6 +2811,8 @@ def test_lakehouse_op_spark_job_budget(spark, tbl, op):
         ),
         "delete_cow": lambda: tbl.delete_where(spark, "id = 7"),
         "delete_dv": lambda: tbl.delete_where(spark, "id = 7", mode="dv"),
+        "delete_cow_miss": lambda: tbl.delete_where(spark, "id = 999"),
+        "delete_dv_miss": lambda: tbl.delete_where(spark, "id = 999", mode="dv"),
         "compact": lambda: tbl.compact(spark),
         "update_cow_checked": lambda: tbl.update_where(
             spark, {"p": "p + 1"}, "id = 7"
@@ -2811,7 +2820,8 @@ def test_lakehouse_op_spark_job_budget(spark, tbl, op):
     }[op]
     v0 = tbl.latest_version()
     jobs = _count_jobs(spark, run)
-    assert tbl.latest_version() == v0 + 1  # the op really committed
+    # the op really committed (a delete matching no row commits nothing)
+    assert tbl.latest_version() == v0 + (0 if op.endswith("_miss") else 1)
     assert jobs <= _JOB_BUDGET[op], f"{op} ran {jobs} Spark jobs"
 
 

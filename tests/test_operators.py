@@ -589,6 +589,12 @@ def test_incremental_extraction_watermark(spark, tmp_path):
     r1 = eng.run_incremental(job, "o_orderkey")
     assert r1.row_count == 1000
     assert eng.last_watermark(job) == "999"
+    # the full run contract: ledger lifecycle row, schema, timing
+    row = eng.ledger.get(job.execution_hash_id, job.source_table)
+    assert row["GlueJobFinalStatus"] == "SUCCEEDED"
+    assert row["GlueAmountOfRecords"] == 1000
+    assert r1.final_schema
+    assert r1.execution_time_s > 0
 
     # no new data -> zero-row increment, watermark unchanged
     r2 = eng.run_incremental(job, "o_orderkey")
@@ -659,6 +665,50 @@ def test_incremental_watermark_numeric_not_lexicographic(spark, tmp_path):
     lake = spark.read.parquet(str(tmp_path / "lake" / "s" / "x" / "orders"))
     assert lake.count() == 13
     assert lake.select("o_orderkey").distinct().count() == 13
+
+
+def test_incremental_failure_routes_to_failed_result(spark, tmp_path):
+    """A failing incremental run returns FAILED with a FAILED ledger
+    row, like ``run_job``, and leaves the stored watermark alone."""
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.engine import (
+        Engine,
+        EngineConfig,
+    )
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.plans.model import (
+        ExtractionPlan,
+    )
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.sinks.ledger import (
+        Ledger,
+    )
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.sources.registry import (
+        SourceRegistry,
+    )
+
+    src = tmp_path / "src"
+    spark.range(0, 5).toDF("o_orderkey").write.parquet(str(src / "orders.parquet"))
+    eng = Engine(
+        spark,
+        SourceRegistry(spark, parquet_root=str(src)),
+        EngineConfig(target_root=str(tmp_path / "lake"), register_catalog=False),
+        Ledger(tmp_path / "ledger.jsonl"),
+    )
+
+    def job(query):
+        return ExtractionPlan.from_dict(
+            {
+                "SourceName": "s", "SourceDatabase": "d", "SourceSchema": "x",
+                "SourceTable": "orders", "Query": query,
+            }
+        ).jobs[0]
+
+    assert eng.run_incremental(job("SELECT * FROM orders"), "o_orderkey").status == "SUCCEEDED"
+    bad = job("SELECT no_such_column FROM orders")
+    r = eng.run_incremental(bad, "o_orderkey")
+    assert r.status == "FAILED" and r.error and r.sink is None
+    row = eng.ledger.get(bad.execution_hash_id, bad.source_table)
+    assert row["GlueJobFinalStatus"] == "FAILED"
+    assert row["ErrorMessage"]
+    assert eng.last_watermark(bad) == "4"
 
 
 def test_quality_checks_detect_violations(spark):
