@@ -25,7 +25,13 @@ Scale notes (100 TB):
   the write-then-count variant SURVEY.md §4 recommends at scale.
 * The plan's ``NumPartitions``/bounds become a ranged, range-
   partitioned scan only when requested; otherwise parallelism is left
-  to the file scan + AQE.
+  to the file scan + AQE.  On the file path the N-way split ranges
+  over ``(ColumnForPartitioningOnS3, ColumnForPartitioningOnSpark)``
+  when the sink column survived the Query's projection: each task
+  then holds a contiguous run of partition values, so a partition
+  directory gets one file (two at a range boundary) instead of one
+  per task, while the Spark column still splits a dominant sink value
+  across all N tasks.
 """
 
 from __future__ import annotations
@@ -174,15 +180,11 @@ class Engine:
             known_prefixes={(job.source_database, job.source_schema)},
         )
         df = self.spark.sql(sql)
-        if job.partitioned_scan and job.num_partitions > 1:
-            # Reproduce the compute-partition spec natively only when the
-            # partition column survived the projection; the range filter
-            # semantics already live inside the Query's WHERE clause.
-            col = job.column_for_partitioning_on_spark
-            norm = {c.lower(): c for c in df.columns}
-            actual = norm.get(str(col).strip().lower())
-            if actual:
-                df = df.repartitionByRange(job.num_partitions, F.col(actual))
+        split = _range_split_columns(job, df.columns)
+        if split:
+            # the range filter semantics already live inside the Query's
+            # WHERE clause; this only sets the write's N-way split
+            df = df.repartitionByRange(job.num_partitions, *map(F.col, split))
         return df
 
     def validate_job(self, job: ExtractionJob) -> dict[str, Any]:
@@ -220,13 +222,17 @@ class Engine:
                 if job.jdbc_connection_string and self.registry.jdbc_enabled
                 else "files"
             )
-            if job.partitioned_scan and job.num_partitions > 1:
-                col = str(job.column_for_partitioning_on_spark or "").strip()
-                if col.lower() not in {c.lower() for c in df.columns}:
-                    out["issues"].append(
-                        f"scan partition column {col!r} not in the projected "
-                        "columns — repartitionByRange would be skipped"
-                    )
+            if (
+                job.partitioned_scan
+                and job.num_partitions > 1
+                and not _range_split_columns(job, df.columns)
+            ):
+                col = str(job.column_for_partitioning_on_spark).strip()
+                out["issues"].append(
+                    f"ColumnForPartitioningOnSpark {col!r} not in the projected "
+                    f"columns — the {job.num_partitions}-way range split "
+                    "would be skipped"
+                )
             if not job.reconciliation_enabled:
                 out["issues"].append(
                     "no ExpectedAmountOfRecords — reconciliation will be 'skipped'"
@@ -472,6 +478,26 @@ class Engine:
                 )
             )
         return result
+
+
+def _range_split_columns(job: ExtractionJob, columns: list[str]) -> list[str]:
+    """The file path's N-way range-split key: ``[sink col, Spark col]``
+    (matched case-insensitively against the projected ``columns``), the
+    sink column dropped when it did not survive the projection or is
+    the Spark column; ``[]`` (no split) when the Spark column did not
+    survive or the plan asks for no partitioned scan."""
+    if not (job.partitioned_scan and job.num_partitions > 1):
+        return []
+    norm = {c.lower(): c for c in columns}
+    spark_col = norm.get(str(job.column_for_partitioning_on_spark).strip().lower())
+    if spark_col is None:
+        return []
+    sink_col = (
+        norm.get(str(job.column_for_partitioning_on_s3).strip().lower())
+        if job.partitioned_sink
+        else None
+    )
+    return [sink_col, spark_col] if sink_col not in (None, spark_col) else [spark_col]
 
 
 def _wm_key(job: ExtractionJob) -> str:

@@ -593,26 +593,6 @@ def prefix_edit_distance_pairs(
     )
 
 
-def simhash_dup_groups(
-    df: DataFrame, id_col: str, text_col: str, num_bits: int = 16
-) -> DataFrame:
-    """Signature groups with >1 member — hamming-0 duplicate clusters.
-
-    Output ``(simhash, n_docs, doc_ids)`` with doc_ids sorted.  For
-    hamming ≤ k, band the signature like MinHash LSH; at 16 bits the
-    exact-collision form is the meaningful one.
-    """
-    sigs = simhash_signatures(df, id_col, text_col, num_bits)
-    return (
-        sigs.groupBy("simhash")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.array_sort(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def connected_components(
     pairs: DataFrame, max_iterations: int = 20, ledger=None
 ) -> DataFrame:

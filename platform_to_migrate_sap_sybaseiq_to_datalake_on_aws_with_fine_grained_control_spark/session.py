@@ -13,6 +13,8 @@ are chosen for a large cluster but validated on ``local[N]``:
   ``migration_tp_utc`` in UTC (sybaseiq_extractor.py:42) and the DuckDB
   oracle compares timestamps as UTC-naive.
 * Arrow enabled for the Pandas-UDF slow path.
+* Driver heap sized to the host (``default_driver_memory``) unless
+  ``SPARK_DRIVER_MEMORY`` sets it.
 """
 
 from __future__ import annotations
@@ -27,6 +29,14 @@ def default_parallelism() -> int:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
     except ValueError:
         return os.cpu_count() or 8
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g, at least 1g: a
+    fixed 48g let one long-lived session's heap grow past a 15 GB
+    host's memory before G1 collected, and the kernel killed the JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys // 2 // 2**30))}g"
 
 
 def get_spark(
@@ -84,7 +94,10 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)

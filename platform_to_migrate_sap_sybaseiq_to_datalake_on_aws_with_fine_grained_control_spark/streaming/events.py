@@ -69,25 +69,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked sliding-window event counts."""
-    return (
-        _with_event_time(events, "ts").withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
 def session_counts(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
 ) -> DataFrame:

@@ -8,11 +8,6 @@ import pytest
 
 REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO_ROOT))
-# bound the test JVM's heap: under the session factory's production
-# default (48g) the heap of one long Tier-1 session grew to 15 GB RSS
-# and was OOM-killed on a 15 GB host; the suite passes at 4g (peak RSS
-# 3.6 GB), so 8g leaves twice that
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
 
 TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMALL = f"{TESTDATA_ROOT}/sf0.001"
@@ -37,6 +32,23 @@ def spark(tmp_path_factory):
     # core-count default from session.py.
     s = get_spark(app_name="tests", warehouse_dir=str(wh), shuffle_partitions=8)
     yield s
+
+
+def count_spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group once the
+    listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

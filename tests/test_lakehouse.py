@@ -18,6 +18,7 @@ from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_contr
     ConcurrentCommitError,
     TransactionLog,
 )
+from tests.conftest import count_spark_jobs
 
 
 def _ids(df):
@@ -2773,23 +2774,6 @@ _JOB_BUDGET = {
 }
 
 
-def _count_jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` runs, counted through a job group once the
-    listener bus has delivered every job-start event."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("op", sorted(_JOB_BUDGET))
 def test_lakehouse_op_spark_job_budget(spark, tbl, op):
     schema = "id long, v string, p double, year string"
@@ -2819,7 +2803,7 @@ def test_lakehouse_op_spark_job_budget(spark, tbl, op):
         ),
     }[op]
     v0 = tbl.latest_version()
-    jobs = _count_jobs(spark, run)
+    jobs = count_spark_jobs(spark, run)
     # the op really committed (a delete matching no row commits nothing)
     assert tbl.latest_version() == v0 + (0 if op.endswith("_miss") else 1)
     assert jobs <= _JOB_BUDGET[op], f"{op} ran {jobs} Spark jobs"

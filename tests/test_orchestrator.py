@@ -573,3 +573,88 @@ def test_sink_lock_key_normalized(spark, tmp_path):
     assert eng._sink_lock("./a/b") is base
     assert eng._sink_lock("a/./b") is base
     assert eng._sink_lock("a/c") is not base
+
+
+def _run_split_job(spark, tmp_path, days, partitioned=True):
+    """``run_job`` over a 600-row ``(id, d)`` source whose date ``d``
+    cycles through ``days`` days independently of ``id``: split 4 ways
+    on ``id`` and Hive-partitioned on ``d`` (or neither, when not
+    ``partitioned``).  Returns the result, the source row count and
+    the run's Spark job count."""
+    from datetime import date, timedelta
+
+    from tests.conftest import count_spark_jobs
+
+    rows = [(i, date(2024, 1, 1) + timedelta(days=i * 7 % days)) for i in range(600)]
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame(rows, "id long, d date").write.parquet(src_path)
+    eng = Engine(
+        spark,
+        SourceRegistry(spark, table_paths={"t": src_path}),
+        EngineConfig(target_root=str(tmp_path / "lake"), register_catalog=False),
+    )
+    split = {"NumPartitions": 4, "ColumnForPartitioningOnSpark": "id",
+             "ColumnForPartitioningOnS3": "d"}
+    plan = ExtractionPlan.from_dict(
+        {"SourceName": "s", "SourceDatabase": "db", "SourceSchema": "x",
+         "SourceTable": "t", "Query": "SELECT * FROM t",
+         **(split if partitioned else {})}
+    )
+    results = []
+    jobs = count_spark_jobs(spark, lambda: results.append(eng.run_job(plan.jobs[0])))
+    assert results[0].status == "SUCCEEDED", results[0].error
+    return results[0], len(rows), jobs
+
+
+def _data_files(result):
+    from pathlib import Path
+
+    return sorted(Path(result.sink.path).rglob("*.parquet"))
+
+
+def test_range_split_gives_each_partition_dir_one_writer(spark, tmp_path):
+    """The N-way split ranges over (sink column, Spark column): each of
+    the 4 tasks writes a contiguous run of the 30 day directories, so a
+    directory gets one file, two where a range boundary cuts it."""
+    result, n_rows, _ = _run_split_job(spark, tmp_path, days=30)
+    files = _data_files(result)
+    dirs = {f.parent for f in files}
+    assert len(dirs) == 30
+    assert len(files) <= len(dirs) + 3, f"{len(files)} files in {len(dirs)} dirs"
+    assert result.row_count == n_rows
+    assert spark.read.parquet(result.sink.path).count() == n_rows
+
+
+def test_range_split_spreads_one_sink_value_over_all_tasks(spark, tmp_path):
+    """The Spark column stays the secondary key: when every row has the
+    same sink value, its one directory still gets all 4 writers (a
+    hash split on the sink column would give it one)."""
+    result, n_rows, _ = _run_split_job(spark, tmp_path, days=1)
+    files = _data_files(result)
+    assert len({f.parent for f in files}) == 1
+    assert len(files) == 4
+    assert spark.read.parquet(result.sink.path).count() == n_rows
+
+
+#: Spark jobs of one ``run_job``: a new sampling pass or re-scan fails here
+_RUN_JOB_BUDGET = {"partitioned": 4, "unpartitioned": 2}
+
+
+@pytest.mark.parametrize("shape", sorted(_RUN_JOB_BUDGET))
+def test_run_job_spark_job_budget(spark, tmp_path, shape):
+    _, _, jobs = _run_split_job(spark, tmp_path, days=30, partitioned=shape == "partitioned")
+    assert jobs <= _RUN_JOB_BUDGET[shape], f"{shape} run_job ran {jobs} Spark jobs"
+
+
+@pytest.mark.parametrize("phys_gib,heap", [(15, "7g"), (1, "1g"), (256, "48g")])
+def test_default_driver_memory_follows_host(monkeypatch, phys_gib, heap):
+    """Half of physical memory, floored at 1g and capped at 48g."""
+    import os
+
+    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.session import (
+        default_driver_memory,
+    )
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * 2**30 // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    assert default_driver_memory() == heap
