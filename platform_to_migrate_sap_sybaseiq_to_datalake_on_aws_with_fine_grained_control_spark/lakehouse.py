@@ -111,18 +111,30 @@ class UnsupportedTableFeatureError(RuntimeError):
 
 
 class ConcurrentCommitError(RuntimeError):
-    """Another writer committed the version this transaction read.
+    """Another writer committed after this transaction read the table,
+    in a way its commit policy cannot absorb; nothing was committed,
+    re-run the operation.  Every commit takes one of three policies:
 
-    Blind appends retry transparently; read-modify-write operations
-    (overwrite, compact) surface this so the caller re-reads — the
-    files they planned to remove may no longer be live.
+    * strict — ``create``, ``clone_to``, ``restore``, ``overwrite`` and
+      the metadata ops except ``drop_check_constraint``: ANY commit
+      after the read raises (the record derives from, or was validated
+      against, exactly that state);
+    * blind — ``append``, ``publish_from`` and the streaming sink:
+      retry under a fresh version (5 races), adopting an interleaved
+      widening; an interleaved rename/drop, declaration, CHECK
+      constraint or identity allocation raises;
+    * rmw — ``merge``, ``update_where``, ``delete_where``, ``compact``
+      and ``drop_check_constraint``: rebase over interleaved
+      same-schema appends and rewrites of disjoint files (20 races);
+      any other interleaved commit raises — the staged removes may be
+      stale.
     """
 
 
 class _TxnAlreadyCommitted(Exception):
-    """Internal: an idempotent append discovered mid-retry that its
-    (app, batch) pair was committed by another writer — unwind as a
-    successful no-op, never a duplicate."""
+    """Internal: an idempotent append found its (app, batch) pair
+    already in the log — unwind as a successful no-op, never a
+    duplicate."""
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -178,6 +190,13 @@ def _commit_header(version: int, op: str, data_change: bool) -> dict:
         "ts": _utc_now_iso(),
         "txn": uuid.uuid4().hex,
     }
+
+
+def _basenames(rec: dict) -> set[str]:
+    """Basenames of the data files a commit record removes or
+    DV-covers: the file footprint the rebase rule compares."""
+    out = {r.rsplit("/", 1)[-1] for r in rec.get("remove", [])}
+    return out | {b for d in rec.get("dv", []) for b in d.get("files", [])}
 
 
 def _fmt_version(v: int) -> str:
@@ -1120,23 +1139,9 @@ class TransactionLog:
             if any(b in live_bn for b in d.get("files", []))
         ]
 
-    def _commit_with_retry(
-        self, build_record, read_version: int | None, attempts: int = 5
-    ) -> int:
-        """Blind commits (``read_version is None``) retry under a fresh
-        version on conflict; read-modify-write commits raise."""
-        for _ in range(attempts):
-            v = self.latest_version() + 1
-            rec = build_record(v)
-            try:
-                self._try_commit(v, rec)
-                return v
-            except ConcurrentCommitError:
-                if read_version is not None:
-                    raise
-        raise ConcurrentCommitError(
-            f"append to {self.table_path} lost {attempts} version races"
-        )
+    #: version races a retrying commit may lose before it surfaces
+    _BLIND_ATTEMPTS = 5
+    _RMW_ATTEMPTS = 20
 
     #: data-rewriting ops whose interleaves a footprint-declaring
     #: transaction may tolerate when the file sets are provably
@@ -1147,100 +1152,123 @@ class TransactionLog:
     #: and append (handled by the dedicated rebase rule).
     _DISJOINT_OK_OPS = frozenset({"delete", "update", "merge", "compact"})
 
-    def _commit_rmw(
+    def _commit(
         self,
-        read_version: int,
-        build_record,
         op: str,
-        attempts: int = 20,
+        read_v: int | None,
+        build,
+        policy: str,
         read_files: set[str] | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
-        """Read-modify-write commit with append-rebase (the published
-        Delta *WriteSerializable* level): interleaved PURE appends can
-        never invalidate a staged rewrite — they only add files, so
-        every file this transaction planned to remove is still live —
-        and the rewrite simply does not see the concurrently appended
-        rows.
+        """Commit ``build(v)`` as the next version ``v`` of a
+        transaction that read the table at ``read_v``; return ``v``.
+        The one commit site of the log — :class:`ConcurrentCommitError`
+        states the three ``policy`` values.  A blind writer that read
+        nothing before it staged (the streaming sink) passes ``None``:
+        its first version probe is its read.
 
+        ``"rmw"`` rebases over interleaved pure appends under the same
+        schema (the published Delta *WriteSerializable* level: appends
+        only add files, so every file this transaction planned to
+        remove is still live; their rows are simply not seen).
         ``read_files`` (basenames) widens the rebase to DISJOINT data
-        rewrites — the Delta conflict-matrix rule that lets concurrent
-        per-partition DELETE/UPDATE/OPTIMIZE pipelines share one table
-        instead of serializing on it.  It must be the transaction's
-        data-skipping READ surface: every file whose stats/partition
-        values admit a predicate match (``_prune_files`` output — a
-        sound over-approximation), or for a compaction exactly the
-        files it rewrites.  An interleaved delete/update/merge/compact
-        then conflicts only when the files it removed or DV-covered
-        intersect this transaction's footprint (read surface + its own
-        removes + its own DV targets); disjoint rewrites rebase like
-        appends do.  Rows the interleaved commit ADDED are not seen —
-        the same write-snapshot anomaly WriteSerializable already
-        accepts for appends.  Callers that read the whole table (merge
-        scans every target row for clause matching) pass ``None`` and
-        keep strict behavior.
+        rewrites — the conflict-matrix rule that lets concurrent
+        per-partition DELETE/UPDATE/OPTIMIZE pipelines share one table.
+        It must be the transaction's data-skipping READ surface (the
+        ``_prune_files`` output, a sound over-approximation; for a
+        compaction exactly the files it rewrites).  An interleaved
+        delete/update/merge/compact then conflicts only when the files
+        it removed or DV-covered intersect this transaction's footprint
+        (read surface + own removes + own DV targets).  Callers that
+        read the whole table pass ``None`` and rebase over appends only.
 
-        Any other interleaved op (overwrite, restore, constraint or
-        schema change) makes the staged removes/outputs stale and
-        raises for a caller-level re-run."""
-        rec = build_record(0)  # probe for the schema this txn commits
-        my_schema = rec.get("schema")
-        footprint: set[str] | None = None
-        if read_files is not None:
-            footprint = set(read_files)
-            footprint |= {
-                r.rsplit("/", 1)[-1] for r in rec.get("remove", [])
-            }
-            footprint |= {
-                b for d in rec.get("dv", []) for b in d.get("files", [])
-            }
+        Every version candidate is re-checked: with ``txn`` = (app,
+        batch), a log already holding that app's batch or a later one
+        raises :class:`_TxnAlreadyCommitted`; a record that allocates
+        identity values raises if an interleaved commit advanced a
+        watermark too (both derived from the same read-time high)."""
+        attempts = {
+            "strict": 1,
+            "blind": self._BLIND_ATTEMPTS,
+            "rmw": self._RMW_ATTEMPTS,
+        }[policy]
         for _ in range(attempts):
             v = self.latest_version() + 1
-            rebased_past_rewrite = False
-            for i in range(read_version + 1, v):
-                mid = self._read_commit(i)
-                if mid.get("op") == "append" and mid.get("schema") == my_schema:
-                    continue
-                if (
-                    footprint is not None
-                    and mid.get("op") in self._DISJOINT_OK_OPS
-                    and mid.get("schema") == my_schema
-                ):
-                    theirs = {
-                        r.rsplit("/", 1)[-1] for r in mid.get("remove", [])
-                    }
-                    theirs |= {
-                        b
-                        for d in mid.get("dv", [])
-                        for b in d.get("files", [])
-                    }
-                    if not (theirs & footprint):
-                        rebased_past_rewrite = True
-                        continue
+            read_v = v - 1 if read_v is None else read_v
+            if policy == "strict" and v != read_v + 1:
                 raise ConcurrentCommitError(
-                    f"table advanced to {v - 1} while {op} ran (read "
-                    f"{read_version}) and commit {i} is a "
-                    f"{mid.get('op')}/schema-change touching this "
-                    "transaction's files — staged removes are stale; "
-                    "re-run"
+                    f"table advanced to {v - 1} while {op} was staged "
+                    f"(read {read_v}) — re-run"
                 )
-            try:
-                full = build_record(v)
-                if rebased_past_rewrite and "dvs" in full:
-                    # the record's DV survival list is a FULL-REPLACE
-                    # field computed against the read-time state; a
-                    # rebase past a disjoint rewrite must recompute it
-                    # against the CURRENT state or it would silently
-                    # drop the vectors that rewrite added/kept
-                    full["dvs"] = self._surviving_dvs(
-                        self._replay(v - 1), full.get("remove", [])
+            if self._txn_done(txn, v - 1):
+                raise _TxnAlreadyCommitted()
+            rec = build(v)
+            mids = []
+            if policy == "rmw" or "identity" in rec:
+                mids = [(i, self._read_commit(i)) for i in range(read_v + 1, v)]
+            rebased = policy == "rmw" and self._rebase(
+                op, read_v, rec, mids, read_files
+            )
+            if rebased and "dvs" in rec:
+                # the DV survival list is a FULL-REPLACE field computed
+                # against the read-time state; a rebase past a disjoint
+                # rewrite recomputes it against the CURRENT state or it
+                # would silently drop the vectors that rewrite added/kept
+                rec["dvs"] = self._surviving_dvs(
+                    self._replay(v - 1), rec.get("remove", [])
+                )
+            for i, mid in mids:
+                if "identity" in rec and mid.get("identity"):
+                    raise ConcurrentCommitError(
+                        f"{op} to {self.table_path} raced an identity "
+                        f"allocation at v{i}; re-run"
                     )
-                self._try_commit(v, full)
+            try:
+                self._try_commit(v, rec)
                 return v
             except ConcurrentCommitError:
-                continue  # loop re-validates the new interleaved commits
+                if policy == "strict":
+                    raise
         raise ConcurrentCommitError(
             f"{op} on {self.table_path} lost {attempts} version races"
         )
+
+    def _rebase(
+        self,
+        op: str,
+        read_v: int,
+        rec: dict,
+        mids: list[tuple[int, dict]],
+        read_files: set[str] | None,
+    ) -> bool:
+        """The ``"rmw"`` rule over the interleaved commits ``mids``:
+        raise unless each is a same-schema append, or (with
+        ``read_files``) a same-schema disjoint rewrite; True if any was
+        a rewrite."""
+        footprint = None
+        if read_files is not None:
+            footprint = set(read_files) | _basenames(rec)
+        rebased = False
+        for i, mid in mids:
+            same = mid.get("schema") == rec.get("schema")
+            if same and mid.get("op") == "append":
+                continue
+            if (
+                same
+                and footprint is not None
+                and mid.get("op") in self._DISJOINT_OK_OPS
+                and not (_basenames(mid) & footprint)
+            ):
+                rebased = True
+                continue
+            raise ConcurrentCommitError(
+                f"table advanced to {mids[-1][0]} while {op} ran (read "
+                f"{read_v}) and commit {i} is a {mid.get('op')}/schema-"
+                "change touching this transaction's files — staged "
+                "removes are stale; re-run"
+            )
+        return rebased
 
     # ---- CHECK constraints ----------------------------------------------
 
@@ -1314,19 +1342,14 @@ class TransactionLog:
                     f"cannot add CHECK {name!r} [{expr}]: {bad} existing "
                     "rows violate it"
                 )
-        rec = self._constraints_record(
-            state, dict(state["constraints"], **{name: expr})
-        )
         # strict: data committed between the validation scan and this
         # commit was never checked, so losing the race must surface
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while CHECK {name!r} was "
-                f"validated (read {read_v}) — re-run"
-            )
-        self._try_commit(v, rec(v))
-        return v
+        return self._alter(
+            "metadata",
+            state,
+            read_v,
+            constraints=dict(state["constraints"], **{name: expr}),
+        )
 
     def drop_check_constraint(self, name: str) -> int:
         read_v = self.latest_version()
@@ -1334,22 +1357,25 @@ class TransactionLog:
         if name not in state["constraints"]:
             raise ValueError(f"no constraint named {name!r}")
         cons = {k: v for k, v in state["constraints"].items() if k != name}
-        return self._commit_rmw(
-            read_v, self._constraints_record(state, cons), "drop_constraint"
-        )
+        # rows appended meanwhile passed a superset: rebase over them
+        return self._alter("metadata", state, read_v, "rmw", constraints=cons)
 
-    @staticmethod
-    def _constraints_record(state: dict, cons: dict[str, str]):
-        """``version -> record`` for the metadata commit that sets the
-        table's CHECK constraints to ``cons``."""
-        return lambda v: {
-            **_commit_header(v, "metadata", False),
+    def _alter(
+        self, op: str, state: dict, read_v: int, policy: str = "strict", **fields
+    ) -> int:
+        """Commit one metadata-only ``op`` record — no file added or
+        removed — read at ``read_v``: the replayed ``state``'s schema
+        and partition keys, overridden or extended by ``fields``."""
+        rec = {
             "schema": state["schema"],
             "partition_keys": state["partition_keys"],
-            "constraints": cons,
             "add": [],
             "remove": [],
+            **fields,
         }
+        return self._commit(
+            op, read_v, lambda v: {**_commit_header(v, op, False), **rec}, policy
+        )
 
     # ---- restore ---------------------------------------------------------
 
@@ -1394,7 +1420,6 @@ class TransactionLog:
         ]
         removes = sorted(r for r in cur["files"] if r not in target["files"])
         rec = {
-            **_commit_header(read_v + 1, "restore", True),
             "schema": target["schema"],
             "partition_keys": target["partition_keys"],
             "restore_of": version,
@@ -1408,14 +1433,12 @@ class TransactionLog:
             "column_mapping": target["column_mapping"],
             "retired_physical": target["retired_physical"],
         }
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while restore was staged "
-                f"(read {read_v})"
-            )
-        self._try_commit(v, rec)
-        return v
+        return self._commit(
+            "restore",
+            read_v,
+            lambda v: {**_commit_header(v, "restore", True), **rec},
+            "strict",
+        )
 
     def clone_to(self, target: str | Path, version: int | None = None) -> int:
         """SHALLOW CLONE (the published Delta ``CREATE TABLE .. CLONE``
@@ -1454,41 +1477,43 @@ class TransactionLog:
             e["base"] = b
             return e
 
+        rec = {
+            "schema": state["schema"],
+            "partition_keys": state["partition_keys"],
+            "constraints": state["constraints"],
+            "clone_of": {"table": src_base, "version": src_v},
+            "add": [absolutize(a) for _, a in sorted(state["files"].items())],
+            "remove": [],
+            "dvs": [absolutize(d) for d in state["dvs"]],
+            "column_mapping": state["column_mapping"],
+            "retired_physical": state["retired_physical"],
+            # declarations travel too: a write to the clone must
+            # compute generated columns and allocate identity
+            # values exactly like a write to the source would
+            "generated": state["generated"],
+            "identity": state["identity"],
+            # the bloom declaration travels for the same reason —
+            # files written into the clone (and later WAP-published
+            # back) must carry bloom sidecars or they never skip
+            "bloom_index": state["bloom_index"],
+            # the clone's files live OUTSIDE its table dir — a
+            # reader unaware of external references would vacuum/
+            # resolve them wrong
+            "reader_features": sorted(
+                state["reader_features"] | {"externalFiles"}
+            ),
+        }
         tgt = TransactionLog(target, self.checkpoint_interval)
-        if tgt.latest_version() != 0:
-            raise ValueError(f"clone target {tgt.table_path} is not empty")
-        tgt._try_commit(
-            1,
-            {
-                # to a downstream consumer of the CLONE all rows are new
-                **_commit_header(1, "clone", True),
-                "schema": state["schema"],
-                "partition_keys": state["partition_keys"],
-                "constraints": state["constraints"],
-                "clone_of": {"table": src_base, "version": src_v},
-                "add": [absolutize(a) for _, a in sorted(state["files"].items())],
-                "remove": [],
-                "dvs": [absolutize(d) for d in state["dvs"]],
-                "column_mapping": state["column_mapping"],
-                "retired_physical": state["retired_physical"],
-                # declarations travel too: a write to the clone must
-                # compute generated columns and allocate identity
-                # values exactly like a write to the source would
-                "generated": state["generated"],
-                "identity": state["identity"],
-                # the bloom declaration travels for the same reason —
-                # files written into the clone (and later WAP-published
-                # back) must carry bloom sidecars or they never skip
-                "bloom_index": state["bloom_index"],
-                # the clone's files live OUTSIDE its table dir — a
-                # reader unaware of external references would vacuum/
-                # resolve them wrong
-                "reader_features": sorted(
-                    state["reader_features"] | {"externalFiles"}
-                ),
-            },
-        )
-        return 1
+        try:
+            # to a downstream consumer of the CLONE all rows are new
+            return tgt._commit(
+                "clone",
+                0,
+                lambda v: {**_commit_header(v, "clone", True), **rec},
+                "strict",
+            )
+        except ConcurrentCommitError:
+            raise ValueError(f"clone target {tgt.table_path} is not empty") from None
 
     def publish_from(
         self,
@@ -1686,30 +1711,21 @@ class TransactionLog:
                     "abandoned, main's history unchanged"
                 )
 
-        def rec(v: int) -> dict:
-            # blind retry: a concurrent widening append must not be
-            # reverted by re-stating read-time metadata; a rename/drop/
-            # declaration/spec race raises — same rules as append()
-            sch, cmap, ret, pkeys = self._reconcile_append_meta(
-                read_v0,
-                v,
-                my_state["schema"],
-                my_state["column_mapping"],
-                my_state["retired_physical"],
-                my_state["partition_keys"],
-                generated=my_state["generated"],
-                identity=my_state["identity"],
-                constraints=my_state["constraints"],
-                strict_spec=True,
-            )
-            r = {
-                **_commit_header(v, "publish", True),
-                "schema": sch,
-                "partition_keys": pkeys,
-                "add": adds,
-                "remove": [],
-                "column_mapping": cmap,
-                "retired_physical": ret,
+        return self._commit_append(
+            "publish",
+            read_v0,
+            adds,
+            {
+                "schema_json": my_state["schema"],
+                "mapping": my_state["column_mapping"],
+                "retired": my_state["retired_physical"],
+                "keys": my_state["partition_keys"],
+                "generated": my_state["generated"],
+                "identity": my_state["identity"],
+                "constraints": my_state["constraints"],
+                "strict_spec": True,
+            },
+            {
                 "publish_of": {
                     "table": stg_base,
                     "from_version": since_version,
@@ -1718,20 +1734,10 @@ class TransactionLog:
                 "reader_features": sorted(
                     my_state["reader_features"] | {"externalFiles"}
                 ),
-            }
-            if pub_identity is not None:
-                # watermark advance derived from the READ-time state: a
-                # racing commit that also advanced it would reissue ids
-                for i in range(read_v0 + 1, v):
-                    if self._read_commit(i).get("identity"):
-                        raise ConcurrentCommitError(
-                            f"publish to {self.table_path} raced an "
-                            f"identity allocation at v{i}; re-run"
-                        )
-                r["identity"] = pub_identity
-            return r
-
-        return self._commit_with_retry(rec, read_version=None)
+                # the watermark advance derives from the READ-time state
+                **({"identity": pub_identity} if pub_identity else {}),
+            },
+        )
 
     @staticmethod
     def _assign_physical(
@@ -1772,8 +1778,6 @@ class TransactionLog:
         Implicit creation (first ``append`` defines everything) keeps
         working; ``create`` is for tables whose contract should exist
         before their first writer runs."""
-        if self.latest_version() != 0:
-            raise ValueError(f"{self.table_path} already has commits")
         keys = partition_keys or []
         names = {f.name for f in schema.fields}
         unknown = [k for k in keys if k not in names]
@@ -1800,20 +1804,17 @@ class TransactionLog:
             if step < 1:
                 raise ValueError("identity step must be a positive integer")
             ident[iname] = {"start": start, "step": step, "high": start}
-        self._try_commit(
-            1,
-            {
-                **_commit_header(1, "create", False),
-                "schema": schema.jsonValue(),
-                "partition_keys": keys,
-                "constraints": dict(constraints or {}),
-                "generated": dict(generated or {}),
-                "identity": ident,
-                "add": [],
-                "remove": [],
-            },
-        )
-        return 1
+        try:
+            return self._alter(
+                "create",
+                {"schema": schema.jsonValue(), "partition_keys": keys},
+                0,
+                constraints=dict(constraints or {}),
+                generated=dict(generated or {}),
+                identity=ident,
+            )
+        except ConcurrentCommitError:
+            raise ValueError(f"{self.table_path} already has commits") from None
 
     @staticmethod
     def _assign_identity(
@@ -1924,14 +1925,9 @@ class TransactionLog:
         canonicalization (``str(value)``) must be exact on both the
         write and lookup side, which float formatting cannot
         guarantee."""
-        read_v = self.latest_version()
-        state = self._replay(read_v)
-        if state["schema"] is None:
-            raise ValueError(f"{self.table_path} has no commits yet")
-        schema = StructType.fromJson(state["schema"])
-        names = [f.name for f in schema.fields]
-        if name not in names:
-            raise ValueError(f"no column {name!r} in {names}")
+        read_v, state, schema = self._read_schema()
+        if name not in schema.names:
+            raise ValueError(f"no column {name!r} in {schema.names}")
         dt = schema[name].dataType.simpleString()
         if dt not in ("tinyint", "smallint", "int", "bigint", "string"):
             raise ValueError(
@@ -1942,25 +1938,14 @@ class TransactionLog:
             raise ValueError("fpp must be in (0, 0.5)")
         if name in state["bloom_index"]:
             raise ValueError(f"bloom index on {name!r} already declared")
-        mapping = state["column_mapping"]
-        phys = mapping.get(name, name)
-        rec = {
-            **_commit_header(read_v + 1, "add_bloom_index", False),
-            "schema": state["schema"],
-            "partition_keys": state["partition_keys"],
-            "add": [],
-            "remove": [],
+        phys = state["column_mapping"].get(name, name)
+        return self._alter(
+            "add_bloom_index",
+            state,
+            read_v,
             # keyed PHYSICAL: blooms are built over staged bytes
-            "bloom_index": dict(state["bloom_index"], **{phys: {"fpp": fpp}}),
-        }
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while the bloom-index "
-                f"declaration was staged (read {read_v})"
-            )
-        self._try_commit(v, rec)
-        return v
+            bloom_index=dict(state["bloom_index"], **{phys: {"fpp": fpp}}),
+        )
 
     def add_generated_column(self, name: str, expr: str) -> int:
         """Declare ``name`` as a GENERATED column (the published Delta
@@ -1987,23 +1972,12 @@ class TransactionLog:
             )
         if name in state["generated"]:
             raise ValueError(f"generated column {name!r} already declared")
-        generated = dict(state["generated"], **{name: expr})
-        rec = {
-            **_commit_header(read_v + 1, "add_generated_column", False),
-            "schema": state["schema"],
-            "partition_keys": state["partition_keys"],
-            "add": [],
-            "remove": [],
-            "generated": generated,
-        }
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while the generated-column "
-                f"declaration was staged (read {read_v})"
-            )
-        self._try_commit(v, rec)
-        return v
+        return self._alter(
+            "add_generated_column",
+            state,
+            read_v,
+            generated=dict(state["generated"], **{name: expr}),
+        )
 
     @staticmethod
     def _apply_generated(df: DataFrame, generated: dict[str, str]) -> DataFrame:
@@ -2055,36 +2029,24 @@ class TransactionLog:
         generations (old files prune via their partition values, new
         ones via column stats, and vice versa), and the next OPTIMIZE
         rewrite migrates whatever it touches to the current spec."""
-        read_v = self.latest_version()
-        state = self._replay(read_v)
-        if state["schema"] is None:
-            raise ValueError(f"{self.table_path} has no commits yet")
-        schema = StructType.fromJson(state["schema"])
-        names = {f.name for f in schema.fields}
-        unknown = [k for k in partition_keys if k not in names]
+        read_v, state, schema = self._read_schema()
+        unknown = [k for k in partition_keys if k not in schema.names]
         if unknown:
-            raise ValueError(f"partition keys {unknown} not in {sorted(names)}")
+            raise ValueError(
+                f"partition keys {unknown} not in {sorted(schema.names)}"
+            )
         mapping = state["column_mapping"]
         phys_keys = [mapping.get(k, k) for k in partition_keys]
         if phys_keys == state["partition_keys"]:
             raise ValueError(f"partition spec is already {partition_keys}")
-        rec = {
-            **_commit_header(read_v + 1, "set_partition_spec", False),
-            "schema": state["schema"],
-            "partition_keys": phys_keys,
-            "previous_partition_keys": state["partition_keys"],
-            "add": [],
-            "remove": [],
-            "column_mapping": mapping,
-        }
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while spec change was staged "
-                f"(read {read_v})"
-            )
-        self._try_commit(v, rec)
-        return v
+        return self._alter(
+            "set_partition_spec",
+            state,
+            read_v,
+            partition_keys=phys_keys,
+            previous_partition_keys=state["partition_keys"],
+            column_mapping=mapping,
+        )
 
     def rename_column(self, old: str, new: str) -> int:
         """``ALTER TABLE .. RENAME COLUMN`` as ONE metadata commit —
@@ -2097,33 +2059,12 @@ class TransactionLog:
         Time travel is exact: old snapshots replay THEIR mapping, so
         they still show the old name.  Partition columns rename too
         (hive dirs keep the physical name; reads alias)."""
-        read_v = self.latest_version()
-        state = self._replay(read_v)
-        if state["schema"] is None:
-            raise ValueError(f"{self.table_path} has no commits yet")
-        schema = StructType.fromJson(state["schema"])
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(f"no column {old!r} in {names}")
-        if new in names:
+        read_v, state, schema = self._read_schema()
+        if old not in schema.names:
+            raise ValueError(f"no column {old!r} in {schema.names}")
+        if new in schema.names:
             raise ValueError(f"column {new!r} already exists")
-        for cname, expr in sorted(state["constraints"].items()):
-            if re.search(rf"\b{re.escape(old)}\b", expr):
-                raise ValueError(
-                    f"column {old!r} is referenced by CHECK constraint "
-                    f"{cname} [{expr}] — drop the constraint first"
-                )
-        for gname, gexpr in sorted(state["generated"].items()):
-            if old == gname or re.search(rf"\b{re.escape(old)}\b", gexpr):
-                raise ValueError(
-                    f"column {old!r} is part of generated column "
-                    f"{gname} [{gexpr}] — generated declarations are fixed"
-                )
-        if old in state["identity"]:
-            raise ValueError(
-                f"column {old!r} is an identity column — its declaration "
-                "is fixed"
-            )
+        self._check_column_unreferenced(state, old)
         mapping = dict(state["column_mapping"])
         phys = mapping.pop(old, old)
         if new != phys:
@@ -2134,27 +2075,16 @@ class TransactionLog:
                 for f in schema.fields
             ]
         )
-        rec = {
-            **_commit_header(read_v + 1, "rename_column", False),
-            "schema": new_schema.jsonValue(),
-            "partition_keys": state["partition_keys"],
-            "rename": {"from": old, "to": new, "physical": phys},
-            "add": [],
-            "remove": [],
-            "column_mapping": mapping,
-            "retired_physical": state["retired_physical"],
-            "reader_features": sorted(
-                state["reader_features"] | {"columnMapping"}
-            ),
-        }
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while rename was staged "
-                f"(read {read_v})"
-            )
-        self._try_commit(v, rec)
-        return v
+        return self._alter(
+            "rename_column",
+            state,
+            read_v,
+            schema=new_schema.jsonValue(),
+            rename={"from": old, "to": new, "physical": phys},
+            column_mapping=mapping,
+            retired_physical=state["retired_physical"],
+            reader_features=sorted(state["reader_features"] | {"columnMapping"}),
+        )
 
     def drop_column(self, name: str) -> int:
         """``ALTER TABLE .. DROP COLUMN`` as ONE metadata commit — the
@@ -2164,15 +2094,10 @@ class TransactionLog:
         re-add of the same name gets a fresh physical and never
         resurrects the dead values.  The next OPTIMIZE rewrite sheds
         the bytes for the files it touches."""
-        read_v = self.latest_version()
-        state = self._replay(read_v)
-        if state["schema"] is None:
-            raise ValueError(f"{self.table_path} has no commits yet")
-        schema = StructType.fromJson(state["schema"])
-        names = [f.name for f in schema.fields]
-        if name not in names:
-            raise ValueError(f"no column {name!r} in {names}")
-        if len(names) == 1:
+        read_v, state, schema = self._read_schema()
+        if name not in schema.names:
+            raise ValueError(f"no column {name!r} in {schema.names}")
+        if len(schema.names) == 1:
             raise ValueError("cannot drop the last column")
         mapping = dict(state["column_mapping"])
         phys = mapping.pop(name, name)
@@ -2181,64 +2106,68 @@ class TransactionLog:
                 f"column {name!r} is a partition key — repartition via "
                 "overwrite instead"
             )
+        self._check_column_unreferenced(state, name)
+        new_schema = StructType([f for f in schema.fields if f.name != name])
+        return self._alter(
+            "drop_column",
+            state,
+            read_v,
+            schema=new_schema.jsonValue(),
+            drop={"column": name, "physical": phys},
+            column_mapping=mapping,
+            retired_physical=sorted(set(state["retired_physical"]) | {phys}),
+            reader_features=sorted(state["reader_features"] | {"columnMapping"}),
+        )
+
+    def _read_schema(self) -> tuple[int, dict, StructType]:
+        """(read version, replayed state, schema) for a schema-level
+        ALTER; raises on a table without commits."""
+        read_v = self.latest_version()
+        state = self._replay(read_v)
+        if state["schema"] is None:
+            raise ValueError(f"{self.table_path} has no commits yet")
+        return read_v, state, StructType.fromJson(state["schema"])
+
+    @staticmethod
+    def _check_column_unreferenced(state: dict, col: str) -> None:
+        """Refuse to rename or drop ``col`` while a CHECK constraint or
+        a generated column references it or it is an identity column."""
+        ref = re.compile(rf"\b{re.escape(col)}\b")
         for cname, expr in sorted(state["constraints"].items()):
-            if re.search(rf"\b{re.escape(name)}\b", expr):
+            if ref.search(expr):
                 raise ValueError(
-                    f"column {name!r} is referenced by CHECK constraint "
+                    f"column {col!r} is referenced by CHECK constraint "
                     f"{cname} [{expr}] — drop the constraint first"
                 )
         for gname, gexpr in sorted(state["generated"].items()):
-            if name == gname or re.search(rf"\b{re.escape(name)}\b", gexpr):
+            if col == gname or ref.search(gexpr):
                 raise ValueError(
-                    f"column {name!r} is part of generated column "
+                    f"column {col!r} is part of generated column "
                     f"{gname} [{gexpr}] — generated declarations are fixed"
                 )
-        if name in state["identity"]:
+        if col in state["identity"]:
             raise ValueError(
-                f"column {name!r} is an identity column — its declaration "
+                f"column {col!r} is an identity column — its declaration "
                 "is fixed"
             )
-        new_schema = StructType([f for f in schema.fields if f.name != name])
-        rec = {
-            **_commit_header(read_v + 1, "drop_column", False),
-            "schema": new_schema.jsonValue(),
-            "partition_keys": state["partition_keys"],
-            "drop": {"column": name, "physical": phys},
-            "add": [],
-            "remove": [],
-            "column_mapping": mapping,
-            "retired_physical": sorted(
-                set(state["retired_physical"]) | {phys}
-            ),
-            "reader_features": sorted(
-                state["reader_features"] | {"columnMapping"}
-            ),
-        }
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while drop was staged "
-                f"(read {read_v})"
-            )
-        self._try_commit(v, rec)
-        return v
 
     def last_txn_version(self, txn_app: str) -> int | None:
         """Latest ``streamTxn.batchId`` committed for ``txn_app``
         (None if no commit carries the app id).  Backward log scan —
-        O(commits-since-last-batch), run once per writer (re)start;
-        both the native streaming sink and the foreachBatch path cache
-        the answer forward.
+        O(commits-since-last-batch): for a stream that is the one commit
+        its previous batch wrote.
 
         Expiry-safe: ``expire_snapshots`` folds the newest
         ``streamTxn`` per app from the expired range into the expiry
         marker, so a stream resuming after retention GC keeps its
         idempotence watermark (the Delta checkpoint carries ``txn``
         actions for the same reason)."""
-        floor = self.earliest_version()
-        for v in range(self.latest_version(), floor - 1, -1):
-            rec = self._read_commit(v)
-            txn = rec.get("streamTxn")
+        return self._txn_batch(txn_app, self.latest_version())
+
+    def _txn_batch(self, txn_app: str, version: int) -> int | None:
+        """:meth:`last_txn_version` as of ``version``."""
+        for v in range(version, self.earliest_version() - 1, -1):
+            txn = self._read_commit(v).get("streamTxn")
             if txn and txn.get("appId") == txn_app:
                 return txn["batchId"]
         return self._expiry_marker().get("stream_txns", {}).get(txn_app)
@@ -2269,12 +2198,11 @@ class TransactionLog:
         duplicate rows."""
         if (txn_app is None) != (txn_version is None):
             raise ValueError("txn_app and txn_version go together")
-        if txn_app is not None:
-            last = self.last_txn_version(txn_app)
-            if last is not None and last >= txn_version:
-                return self.latest_version()  # already-committed replay
+        txn = None if txn_app is None else (txn_app, txn_version)
         keys = partition_keys or []
         read_v0 = self.latest_version()  # the version our schema derives from
+        if self._txn_done(txn, read_v0):
+            return read_v0  # already-committed replay: no Spark job runs
         state = self._replay(read_v0)
         mapping = dict(state["column_mapping"])
         retired = list(state["retired_physical"])
@@ -2333,56 +2261,83 @@ class TransactionLog:
                 "column_mapping": mapping,
             },
         )
-
-        def rec(v: int) -> dict:
-            sch, cmap, ret, pkeys = self._reconcile_append_meta(
-                read_v0,
-                v,
-                schema_json,
-                mapping,
-                retired,
-                keys,
-                generated=state["generated"],
-                identity=identity,
-                constraints=state["constraints"],
+        extra = {}
+        if identity:
+            # allocation derived from the READ-time watermark
+            extra["identity"] = self._advance_identity(
+                identity, adds, df.sparkSession, state
             )
+        return self._commit_append(
+            "append",
+            read_v0,
+            adds,
+            {
+                "schema_json": schema_json,
+                "mapping": mapping,
+                "retired": retired,
+                "keys": keys,
+                "generated": state["generated"],
+                "identity": identity,
+                "constraints": state["constraints"],
+            },
+            extra,
+            txn,
+        )
+
+    def _txn_done(self, txn: tuple[str, int] | None, version: int) -> bool:
+        """Whether the log holds ``txn`` = (app, batch), or a later
+        batch of the app, as of ``version``."""
+        if txn is None:
+            return False
+        last = self._txn_batch(txn[0], version)
+        return last is not None and last >= txn[1]
+
+    def _commit_append(
+        self,
+        op: str,
+        read_v: int | None,
+        adds: list[dict],
+        meta: dict,
+        extra: dict | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int:
+        """The commit half of an append: commit the staged ``adds`` as
+        one blind ``op`` commit of a writer that read the table at
+        ``read_v``; return the committed version.
+
+        ``meta`` holds the :meth:`_reconcile_append_meta` arguments the
+        rows were staged under, as read at ``read_v``; ``None`` (the
+        streaming sink, whose metadata dates from query start)
+        reconciles them against the current table on every version
+        candidate.  ``extra`` fields follow the reconciled metadata in
+        the record.  ``txn`` = (app, batch) is the idempotent-writes
+        contract: a batch the log already holds when the commit lands —
+        a replay, or a racing writer of the same app — commits nothing,
+        drops the staged bytes and returns the latest version;
+        otherwise the record carries it as ``streamTxn``."""
+        meta_v = -1 if read_v is None else read_v
+
+        def build(v: int) -> dict:
+            sch, cmap, ret, pkeys = self._reconcile_append_meta(meta_v, v, **meta)
             r = {
-                **_commit_header(v, "append", True),
+                **_commit_header(v, op, True),
                 "schema": sch,
                 "partition_keys": pkeys,
                 "add": adds,
                 "remove": [],
                 "column_mapping": cmap,
                 "retired_physical": ret,
+                **(extra or {}),
             }
-            if identity:
-                # allocation derived from the READ-time watermark: a
-                # racing commit that also advanced it would hand out
-                # overlapping ids — raise for a caller-level re-run
-                for i in range(read_v0 + 1, v):
-                    if self._read_commit(i).get("identity"):
-                        raise ConcurrentCommitError(
-                            f"append to {self.table_path} raced an "
-                            f"identity allocation at v{i}; re-run"
-                        )
-                r["identity"] = self._advance_identity(
-                    identity, adds, df.sparkSession, state
-                )
-            if txn_app is not None:
-                # re-validate on every version candidate: the race a
-                # blind retry can lose includes ANOTHER writer of the
-                # same app committing our batch id first
-                last = self.last_txn_version(txn_app)
-                if last is not None and last >= txn_version:
-                    for a in adds:  # replay detected late: drop bytes
-                        (self.table_path / a["path"]).unlink(missing_ok=True)
-                    raise _TxnAlreadyCommitted()
-                r["streamTxn"] = {"appId": txn_app, "batchId": txn_version}
+            if txn is not None:
+                r["streamTxn"] = {"appId": txn[0], "batchId": txn[1]}
             return r
 
         try:
-            return self._commit_with_retry(rec, read_version=None)
+            return self._commit(op, read_v, build, "blind", txn=txn)
         except _TxnAlreadyCommitted:
+            for a in adds:  # a replay: drop the re-staged bytes
+                (self.table_path / a["path"]).unlink(missing_ok=True)
             return self.latest_version()
 
     def _reconcile_append_meta(
@@ -2627,14 +2582,7 @@ class TransactionLog:
                 ),
             }
 
-        v = self.latest_version() + 1
-        if v != read_v + 1:
-            raise ConcurrentCommitError(
-                f"table advanced to {v - 1} while overwrite was staged "
-                f"(read {read_v})"
-            )
-        self._try_commit(v, rec(v))
-        return v
+        return self._commit("overwrite", read_v, rec, "strict")
 
     def _affected_files(
         self, spark: SparkSession, state: dict, hit_df: DataFrame
@@ -2664,7 +2612,7 @@ class TransactionLog:
         ``[min, max]`` per key is provably outside the transaction's
         read set.  Declaring that surface lets disjoint partition-
         scoped merge pipelines commit concurrently via
-        :meth:`_commit_rmw`'s disjoint-rewrite rebase instead of
+        :meth:`_commit`'s disjoint-rewrite rebase instead of
         serializing — the same ``_prune_files`` skipping the merge's
         remove set already relies on, so the surface is a sound
         over-approximation by construction (missing stats ⇒ the file
@@ -2899,9 +2847,9 @@ class TransactionLog:
         # the equi-keys, so without by-source clauses (which inspect
         # every target row by definition) the read surface narrows to
         # the source's key bounds — disjoint-key merges then commit
-        # concurrently through _commit_rmw's disjoint-rewrite rebase.
+        # concurrently through _commit's disjoint-rewrite rebase.
         # Schema evolution changes the table contract, where strict
-        # serialization is the honest answer (_commit_rmw's
+        # serialization is the honest answer (_commit's
         # schema-equality gate would block the rebase anyway).
         read_surface = (
             None
@@ -3281,7 +3229,7 @@ class TransactionLog:
                 )
         # read surface = the pruned files; lets disjoint per-partition
         # deletes/rewrites commit concurrently instead of serializing
-        # (see _commit_rmw)
+        # (see _commit)
         read_surface = {rel.rsplit("/", 1)[-1] for rel in pruned}
         return self._rewrite(
             spark,
@@ -3321,7 +3269,7 @@ class TransactionLog:
         the staged data against the CHECK and generated-column
         constraints; ``identity`` (merge) advances the identity
         watermarks past the staged rows.  ``read_files`` is the read
-        surface :meth:`_commit_rmw` rebases against.
+        surface :meth:`_commit` rebases against.
 
         The no-op rule: a rewrite that removes no file, adds no file
         and stages no deletion vector commits nothing and returns
@@ -3390,16 +3338,10 @@ class TransactionLog:
                 # the rewrite read THROUGH the rest, so they are dropped
                 r["dvs"] = self._surviving_dvs(state, removes)
             if identity:
-                for i in range(read_v + 1, v):
-                    if self._read_commit(i).get("identity"):
-                        raise ConcurrentCommitError(
-                            f"{op} to {self.table_path} raced an "
-                            f"identity allocation at v{i}; re-run"
-                        )
                 r["identity"] = new_identity
             return r
 
-        return self._commit_rmw(read_v, rec, op, read_files=read_files)
+        return self._commit(op, read_v, rec, "rmw", read_files=read_files)
 
     def compact(
         self,
@@ -3511,7 +3453,7 @@ class TransactionLog:
         # a compaction reads exactly the files it rewrites, so its
         # read surface IS the remove set: interleaved appends and
         # disjoint rewrites (another partition's OPTIMIZE/DELETE)
-        # rebase instead of forcing a re-run (see _commit_rmw)
+        # rebase instead of forcing a re-run (see _commit)
         return self._rewrite(
             spark,
             "compact",
@@ -4165,8 +4107,8 @@ def foreach_batch_sink(
 
     Exactly-once: every commit records ``streamTxn = (app_id,
     batch_id)`` (the idempotent-writes design the native sink shares),
-    so a crash-replayed batch is a no-op.  The last committed batch is
-    scanned once per (re)start and cached forward.
+    so a crash-replayed batch is a no-op: ``append`` finds it in the
+    log before it stages anything.
 
     Usage::
 
@@ -4174,16 +4116,9 @@ def foreach_batch_sink(
                .foreachBatch(foreach_batch_sink(table, "my-app"))
                .option("checkpointLocation", ckpt).start())
     """
-    state: dict = {"last": None, "scanned": False}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        log = TransactionLog(path)
-        if not state["scanned"]:
-            state["last"] = log.last_txn_version(app_id)
-            state["scanned"] = True
-        if state["last"] is not None and state["last"] >= batch_id:
-            return  # crash-replayed batch: already committed
-        log.append(
+        TransactionLog(path).append(
             batch_df,
             partition_keys=partition_keys,
             evolve_schema=evolve_schema,
@@ -4191,7 +4126,6 @@ def foreach_batch_sink(
             txn_app=app_id,
             txn_version=batch_id,
         )
-        state["last"] = batch_id
 
     return sink
 

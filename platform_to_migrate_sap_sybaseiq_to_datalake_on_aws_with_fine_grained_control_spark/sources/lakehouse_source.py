@@ -59,11 +59,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..lakehouse import (
-    TransactionLog,
-    _collect_file_stats,
-    _commit_header,
-)
+from ..lakehouse import TransactionLog, _collect_file_stats
 
 
 # Hive escapePathName's character set: partition VALUES containing
@@ -623,59 +619,20 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
 
     # -- driver side --
 
-    def _already_committed(self, log: TransactionLog, batch_id: int) -> bool:
-        if self.txn_app_id is None:
-            return False
-        # in-instance cache: the writer lives for the whole query run,
-        # so after the first commit only the counter is consulted — the
-        # backward log scan happens once per (re)start, not per batch
-        last = getattr(self, "_last_txn_batch", None)
-        if last is not None:
-            return last >= batch_id
-        for v in range(log.latest_version(), 0, -1):
-            rec = log._read_commit(v)
-            txn = rec.get("streamTxn")
-            if txn and txn["appId"] == self.txn_app_id:
-                self._last_txn_batch = txn["batchId"]
-                return txn["batchId"] >= batch_id
-        return False
-
     def commit(self, messages, batchId: int) -> None:
-        log = TransactionLog(self.path)
-        adds = [a for m in messages if m is not None for a in m.adds]
-        if self._already_committed(log, batchId):
-            for a in adds:  # replayed batch: drop the re-staged bytes
-                (log.table_path / a["path"]).unlink(missing_ok=True)
-            return
-        schema_json = self.commit_schema.jsonValue()
-
-        def rec(v: int) -> dict:
-            # the stream's schema was derived at query start, so EVERY
-            # batch reconciles: a concurrent widening must not be
-            # reverted by a later micro-batch's commit (read_v=-1
-            # forces the check; replay is checkpointed).  The same
-            # check guards column mapping: staged stream bytes carry
-            # LOGICAL names physically, so a rename/drop landing
-            # mid-stream rebinding any stream column raises.
-            sch, cmap, ret, pkeys = log._reconcile_append_meta(
-                -1, v, schema_json, keys=self.partition_keys
-            )
-            r = {
-                **_commit_header(v, "append", True),
-                "schema": sch,
-                "partition_keys": pkeys,
-                "add": adds,
-                "remove": [],
-                "column_mapping": cmap,
-                "retired_physical": ret,
-            }
-            if self.txn_app_id is not None:
-                r["streamTxn"] = {"appId": self.txn_app_id, "batchId": batchId}
-            return r
-
-        log._commit_with_retry(rec, read_version=None)
-        if self.txn_app_id is not None:
-            self._last_txn_batch = batchId
+        # the commit half of TransactionLog.append(txn_app=...).  The
+        # stream's schema was derived at query start, so EVERY batch
+        # reconciles (read version None): a concurrent widening is not
+        # reverted by a later micro-batch, and a rename/drop landing
+        # mid-stream rebinding any stream column raises (staged stream
+        # bytes carry LOGICAL names physically).
+        TransactionLog(self.path)._commit_append(
+            "append",
+            None,
+            [a for m in messages if m is not None for a in m.adds],
+            {"schema_json": self.commit_schema.jsonValue(), "keys": self.partition_keys},
+            txn=None if self.txn_app_id is None else (self.txn_app_id, batchId),
+        )
 
     def abort(self, messages, batchId: int) -> None:
         tp = Path(self.path)

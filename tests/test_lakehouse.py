@@ -156,6 +156,62 @@ def test_commit_conflict_detection_and_append_retry(spark, tbl):
     assert _ids(tbl.snapshot(spark)) == [1, 2]
 
 
+def _created(spark, tbl):
+    tbl.create(_df(spark, [(1, "a", "2024")]).schema)
+
+
+def _two_appends(spark, tbl):
+    tbl.append(_df(spark, [(1, "a", "2024")]), ["year"])
+    tbl.append(_df(spark, [(2, "b", "2024")]))
+
+
+_STRICT_OPS = {
+    "add_check_constraint": (
+        _two_appends, lambda spark, t: t.add_check_constraint(spark, "pos", "id > 0")
+    ),
+    "restore": (_two_appends, lambda spark, t: t.restore(1)),
+    "add_bloom_index": (_two_appends, lambda spark, t: t.add_bloom_index("id")),
+    "add_generated_column": (
+        _created, lambda spark, t: t.add_generated_column("g", "id * 2")
+    ),
+    "set_partition_spec": (_two_appends, lambda spark, t: t.set_partition_spec([])),
+    "rename_column": (_two_appends, lambda spark, t: t.rename_column("v", "w")),
+    "drop_column": (_two_appends, lambda spark, t: t.drop_column("v")),
+    "overwrite": (
+        _two_appends,
+        lambda spark, t: t.overwrite(_df(spark, [(5, "e", "2024")]), ["year"]),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_STRICT_OPS))
+def test_strict_ops_refuse_an_interleaved_append(spark, tbl, monkeypatch, op):
+    """The strict commit policy: these ops validate or derive their
+    record from the state they read, so a commit landing between that
+    read and their own commit must surface, never be rebased over.  A
+    foreign append lands from inside the op's first replay; the op
+    raises and the log holds only the foreign commit."""
+    setup, run = _STRICT_OPS[op]
+    setup(spark, tbl)
+    v0 = tbl.latest_version()
+    orig = TransactionLog._replay
+    raced = {"done": False}
+
+    def replay_then_race(self, *a, **k):
+        state = orig(self, *a, **k)
+        if self is tbl and not raced["done"]:
+            raced["done"] = True
+            TransactionLog(tbl.table_path).append(_df(spark, [(9, "z", "2024")]))
+        return state
+
+    monkeypatch.setattr(TransactionLog, "_replay", replay_then_race)
+    with pytest.raises(ConcurrentCommitError):
+        run(spark, tbl)
+    assert raced["done"]
+    assert tbl.latest_version() == v0 + 1
+    assert tbl._read_commit(v0 + 1)["op"] == "append"
+
+
 def test_torn_log_raises(spark, tbl):
     tbl.append(_df(spark, [(1, "a", "2024")]), ["year"])
     tbl.append(_df(spark, [(2, "b", "2024")]))
@@ -2365,18 +2421,18 @@ def test_publish_racing_check_constraint_raises(
     stg = TransactionLog(tmp_path / "stg")
     tbl.clone_to(stg.table_path)
     stg.append(_df(spark, [(-3, "c", "2024")]))
-    orig = TransactionLog._commit_with_retry
+    orig = TransactionLog._try_commit
     raced = {"done": False}
 
-    def race_then_commit(self, build_record, read_version, attempts=5):
+    def race_then_commit(self, version, record):
         if not raced["done"]:
             raced["done"] = True
             TransactionLog(self.table_path).add_check_constraint(
                 spark, "pos", "id > 0"
             )
-        return orig(self, build_record, read_version, attempts)
+        return orig(self, version, record)
 
-    monkeypatch.setattr(TransactionLog, "_commit_with_retry", race_then_commit)
+    monkeypatch.setattr(TransactionLog, "_try_commit", race_then_commit)
     with pytest.raises(ConcurrentCommitError, match="CHECK constraints"):
         tbl.publish_from(stg, since_version=1, spark=spark)
     assert _ids(tbl.snapshot(spark)) == [1]
@@ -2536,16 +2592,16 @@ def test_publish_racing_partition_spec_change_raises(
     stg = TransactionLog(tmp_path / "stg")
     tbl.clone_to(stg.table_path)
     stg.append(_df(spark, [(3, "c", "2025")]))
-    orig = TransactionLog._commit_with_retry
+    orig = TransactionLog._try_commit
     raced = {"done": False}
 
-    def race_then_commit(self, build_record, read_version, attempts=5):
+    def race_then_commit(self, version, record):
         if not raced["done"]:
             raced["done"] = True
             TransactionLog(self.table_path).set_partition_spec([])
-        return orig(self, build_record, read_version, attempts)
+        return orig(self, version, record)
 
-    monkeypatch.setattr(TransactionLog, "_commit_with_retry", race_then_commit)
+    monkeypatch.setattr(TransactionLog, "_try_commit", race_then_commit)
     with pytest.raises(ConcurrentCommitError, match="partition-spec"):
         tbl.publish_from(stg, since_version=1)
     assert _ids(tbl.snapshot(spark)) == [1]

@@ -515,3 +515,32 @@ def test_max_bytes_per_trigger_admission(spark, tbl):
         max_files_per_trigger=2, max_bytes_per_trigger=10**9,
     )
     assert r2.latestOffset()["version"] == 1  # 2 files = first commit
+
+
+def test_stream_sink_commits_on_expired_log(spark, tbl):
+    """The sink's idempotence check honours the expiry horizon: after
+    ``expire_snapshots`` removed the commit that carries an app's
+    ``streamTxn``, a replayed batch is still a no-op (the watermark
+    folded into the expiry marker) and new batches, of that app or a
+    new one, commit instead of tripping over the expired records."""
+    schema = _df(spark, [(1, 10, "2024")]).schema
+    tbl.create(schema)
+
+    def commit(app, batch):
+        LakehouseStreamWriter(str(tbl.table_path), schema, [], app).commit(
+            [LakehouseCommitMessage(adds=[])], batchId=batch
+        )
+
+    commit("A", 0)  # v2 carries streamTxn A/0
+    for i in range(6):
+        commit(None, i)  # v3..v8
+    tbl.expire_snapshots(retain_last=2)
+    assert tbl.earliest_version() == 7
+    commit("A", 0)  # replay: already committed at v2
+    assert tbl.latest_version() == 8
+    commit("A", 1)
+    assert tbl.latest_version() == 9
+    assert tbl._read_commit(9)["streamTxn"] == {"appId": "A", "batchId": 1}
+    commit("B", 0)
+    assert tbl.latest_version() == 10
+    assert tbl.last_txn_version("A") == 1 and tbl.last_txn_version("B") == 0

@@ -609,6 +609,34 @@ def test_package_reads_no_repo_root_artifacts():
     assert not bad, f"library code reads repo-root artifacts: {bad}"
 
 
+def test_lakehouse_commits_through_one_site():
+    """Every transaction-log commit goes through
+    ``TransactionLog._commit``, which owns the version probe, the
+    conflict policies and the retries: the create-if-absent primitive
+    ``_try_commit`` has exactly one caller in the package, so a new
+    hand-written commit site fails here."""
+    import ast
+    from pathlib import Path
+
+    import platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark as pkg_mod
+
+    pkg = Path(pkg_mod.__file__).parent
+    callers = []
+    for mod in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(mod.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "_try_commit"
+                ):
+                    callers.append(f"{mod.relative_to(pkg)}:{fn.name}")
+    assert callers == ["lakehouse.py:_commit"], callers
+
+
 def test_rotation_fronts_new_then_stalest_green():
     """Driver-sample rotation: never-verified oracle entries first,
     then verified entries ordered by the round of their latest green
