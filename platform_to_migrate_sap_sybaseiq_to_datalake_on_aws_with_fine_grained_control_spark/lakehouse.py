@@ -1185,7 +1185,9 @@ class TransactionLog:
 
         Every version candidate is re-checked: with ``txn`` = (app,
         batch), a log already holding that app's batch or a later one
-        raises :class:`_TxnAlreadyCommitted`; a record that allocates
+        raises :class:`_TxnAlreadyCommitted` (the caller checked the log
+        through ``read_v``, so each check scans only the commits that
+        landed after the previous one); a record that allocates
         identity values raises if an interleaved commit advanced a
         watermark too (both derived from the same read-time high)."""
         attempts = {
@@ -1193,6 +1195,7 @@ class TransactionLog:
             "blind": self._BLIND_ATTEMPTS,
             "rmw": self._RMW_ATTEMPTS,
         }[policy]
+        checked = read_v
         for _ in range(attempts):
             v = self.latest_version() + 1
             read_v = v - 1 if read_v is None else read_v
@@ -1201,8 +1204,9 @@ class TransactionLog:
                     f"table advanced to {v - 1} while {op} was staged "
                     f"(read {read_v}) — re-run"
                 )
-            if self._txn_done(txn, v - 1):
+            if self._txn_done(txn, v - 1, since=checked):
                 raise _TxnAlreadyCommitted()
+            checked = v - 1
             rec = build(v)
             mids = []
             if policy == "rmw" or "identity" in rec:
@@ -2164,12 +2168,18 @@ class TransactionLog:
         actions for the same reason)."""
         return self._txn_batch(txn_app, self.latest_version())
 
-    def _txn_batch(self, txn_app: str, version: int) -> int | None:
-        """:meth:`last_txn_version` as of ``version``."""
-        for v in range(version, self.earliest_version() - 1, -1):
+    def _txn_batch(
+        self, txn_app: str, version: int, since: int | None = None
+    ) -> int | None:
+        """:meth:`last_txn_version` as of ``version``; with ``since``,
+        searched only among the commits in ``(since, version]``."""
+        stop = self.earliest_version() - 1 if since is None else since
+        for v in range(version, stop, -1):
             txn = self._read_commit(v).get("streamTxn")
             if txn and txn.get("appId") == txn_app:
                 return txn["batchId"]
+        if since is not None:
+            return None
         return self._expiry_marker().get("stream_txns", {}).get(txn_app)
 
     def append(
@@ -2284,12 +2294,15 @@ class TransactionLog:
             txn,
         )
 
-    def _txn_done(self, txn: tuple[str, int] | None, version: int) -> bool:
+    def _txn_done(
+        self, txn: tuple[str, int] | None, version: int, since: int | None = None
+    ) -> bool:
         """Whether the log holds ``txn`` = (app, batch), or a later
-        batch of the app, as of ``version``."""
+        batch of the app, as of ``version`` (among the commits after
+        ``since`` only, when given)."""
         if txn is None:
             return False
-        last = self._txn_batch(txn[0], version)
+        last = self._txn_batch(txn[0], version, since)
         return last is not None and last >= txn[1]
 
     def _commit_append(
@@ -3564,7 +3577,11 @@ class TransactionLog:
             # anti-joined out.  AQE broadcasts the DV side in the common
             # case (deleted rows << table); a compaction materializes
             # the deletions and drops the vectors.
-            dv = spark.read.parquet(
+            # the sidecars' schema is fixed: stating it skips the
+            # footer-inference job an unschematized read would run
+            dv = spark.read.schema(
+                "file_name string, row_index long"
+            ).parquet(
                 *[str(self.table_path / d["path"]) for d in dvs]
             ).select(
                 F.col("file_name").alias("_fn"),
@@ -3657,20 +3674,27 @@ class TransactionLog:
         update_preimage, update_postimage, delete} and
         ``_commit_version`` (the Delta-CDF readout shape).
 
-        Sources, per commit: merge/delete commits read their staged
-        ``_cdf`` sidecar files verbatim; append commits synthesize
-        ``insert`` rows from their added data files (no sidecar needed
-        — the adds ARE the inserts); ``dataChange: false`` commits
-        (compaction) contribute nothing.  A range crossing an
-        ``overwrite`` raises: an overwrite is a full refresh, not a
-        delta — read ``snapshot()`` instead (documented contract, same
-        restriction Delta places on non-CDC-tracked rewrites).
+        Sources: merge/delete commits read their staged ``_cdf``
+        sidecar files verbatim; append commits synthesize ``insert``
+        rows from their added data files (no sidecar needed — the adds
+        ARE the inserts); ``dataChange: false`` commits (compaction)
+        contribute nothing.  A range crossing an ``overwrite`` raises:
+        an overwrite is a full refresh, not a delta — read
+        ``snapshot()`` instead (documented contract, same restriction
+        Delta places on non-CDC-tracked rewrites).
+
+        One scan per GROUP of commits whose files read alike — same
+        source kind (sidecars or adds), commit schema, column mapping
+        and partition keys — so a feed over many appends and a few
+        row-level commits plans as two scans, not one per commit.
+        ``_commit_version`` is looked up from each row's file basename
+        (uuid-unique within the table) in one map literal per group.
 
         Rows are aligned to the ``to``-version schema (widen-only), so
         a feed spanning an int→long evolution reads under the widened
         type.  Feeds also span RENAMEs exactly: staged bytes (data and
         ``_cdf`` sidecars alike) carry the frozen PHYSICAL names, so
-        every per-commit frame is taken to physical and renamed ONCE
+        every per-group frame is taken to physical and renamed ONCE
         into the ``to``-version logical view; columns dropped before
         ``to`` are dead for the feed and excluded before the rename
         (their physical names may have been reused logically)."""
@@ -3682,14 +3706,17 @@ class TransactionLog:
         state = self._replay(to_version)
         self._check_features(state)
         to_map = state["column_mapping"]
-        target = StructType.fromJson(state["schema"]).add(
-            "_change_type", "string", False
+        target = (
+            StructType.fromJson(state["schema"])
+            .add("_change_type", "string", False)
+            .add("_commit_version", "long", False)
         )
         # physical name -> to-version logical name, TOTAL over live cols
         phys_to_logical = {
-            to_map.get(f.name, f.name): f.name for f in target.fields[:-1]
+            to_map.get(f.name, f.name): f.name for f in target.fields[:-2]
         }
-        parts: list[DataFrame] = []
+        # (is_cdf, schema, mapping, keys) -> {path: (version, entry)}
+        groups: dict[tuple, dict[str, tuple[int, dict]]] = {}
         for v in range(from_version + 1, to_version + 1):
             rec = self._read_commit(v)
             if not rec.get("dataChange", True):
@@ -3699,51 +3726,60 @@ class TransactionLog:
                     f"commit {v} is a {rec['op']} (full refresh/rewind, "
                     "not a delta) — read snapshot() at or after it instead"
                 )
-            commit_schema = StructType.fromJson(rec["schema"])
-            cm = rec.get("column_mapping") or {}
-            if rec.get("cdf") is not None:
-                paths = [str(self.table_path / c["path"]) for c in rec["cdf"]]
-                if not paths:
-                    continue
+            cdf = rec.get("cdf")
+            key = (
+                cdf is not None,
+                json.dumps(rec["schema"], sort_keys=True),
+                json.dumps(rec.get("column_mapping") or {}, sort_keys=True),
+                tuple(rec.get("partition_keys", [])),
+            )
+            for e in rec.get("add", []) if cdf is None else cdf:
+                groups.setdefault(key, {})[e["path"]] = (v, e)
+        parts: list[DataFrame] = []
+        for (is_cdf, schema_js, cm_js, keys), files in groups.items():
+            commit_schema = StructType.fromJson(json.loads(schema_js))
+            cm = json.loads(cm_js)
+            if is_cdf:
                 df = spark.read.schema(
                     _physical_struct(commit_schema, cm).add(
                         "_change_type", "string", False
                     )
-                ).parquet(*paths)
+                ).parquet(*[str(self.table_path / p) for p in files])
+                df = df.select("*", F.col("_metadata.file_name").alias("_fn"))
             else:
-                add_files = {a["path"]: a for a in rec.get("add", [])}
-                if not add_files:
-                    continue
                 df = self._read_files(
                     spark,
                     {
-                        "files": add_files,
-                        "schema": rec["schema"],
-                        "partition_keys": rec.get("partition_keys", []),
+                        "files": {p: e for p, (_, e) in files.items()},
+                        "schema": commit_schema.jsonValue(),
+                        "partition_keys": list(keys),
                         "column_mapping": cm,
                     },
+                    with_file_info=True,
                 )
                 # commit-logical -> physical (the stable spine)
                 df = _rename_frame(df, cm).select(
                     "*", F.lit("insert").alias("_change_type")
                 )
+            versions = ", ".join(
+                "'{}', {}L".format(
+                    p.rsplit("/", 1)[-1].replace("\\", "\\\\").replace("'", "\\'"),
+                    v,
+                )
+                for p, (v, _) in files.items()
+            )
             # physical -> to-logical; dead physicals dropped first
             df = df.select(
                 *[
                     F.col(c).alias(phys_to_logical.get(c, c))
                     for c in df.columns
                     if c in phys_to_logical or c == "_change_type"
-                ]
+                ],
+                F.expr(f"map({versions})[_fn]").alias("_commit_version"),
             )
-            parts.append(
-                align_to_schema(df, target).select(
-                    "*", F.lit(v).cast("bigint").alias("_commit_version")
-                )
-            )
+            parts.append(align_to_schema(df, target))
         if not parts:
-            return spark.createDataFrame(
-                [], target.add("_commit_version", "long", False)
-            )
+            return spark.createDataFrame([], target)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -500,6 +500,69 @@ def test_change_feed_survives_vacuum_of_retained_versions(spark, tbl):
     assert got == {(1, "insert"), (1, "delete")}
 
 
+def test_change_feed_groups_span_rename_widening_and_row_level(spark, tbl):
+    """A feed over appends before and after a RENAME, an int->long
+    evolve append, a MERGE (sidecar) and a DV DELETE reads one scan per
+    group of alike commits, and still tags every row with its own
+    commit's version under the to-version names and types."""
+    from collections import Counter
+
+    schema = "id int, v string, year string"
+    tbl.append(spark.createDataFrame([(1, "a", "2024"), (2, "b", "2025")], schema), ["year"])
+    tbl.rename_column("v", "val")  # v2
+    tbl.append(spark.createDataFrame([(3, "c", "2024")], "id int, val string, year string"))
+    tbl.append(
+        spark.createDataFrame([(4, "d", "2025")], "id long, val string, year string"),
+        evolve_schema=True,
+    )  # v4: id widens to long
+    tbl.merge_upsert(
+        spark.createDataFrame([(1, "A", "2024")], "id long, val string, year string"), ["id"]
+    )  # v5
+    tbl.delete_where(spark, "id = 2", mode="dv")  # v6
+    feed = tbl.read_change_feed(spark, 0)
+    assert dict(feed.dtypes)["id"] == "bigint"
+    got = Counter((r.id, r.val, r._change_type, r._commit_version) for r in feed.collect())
+    assert got == Counter(
+        [
+            (1, "a", "insert", 1),
+            (2, "b", "insert", 1),
+            (3, "c", "insert", 3),
+            (4, "d", "insert", 4),
+            (1, "a", "update_preimage", 5),
+            (1, "A", "update_postimage", 5),
+            (2, "b", "delete", 6),
+        ]
+    )
+    # three append groups (pre-rename, post-rename, widened) + one
+    # sidecar group for the merge and the delete
+    plan = feed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation [") == 4, plan
+
+
+def test_building_a_read_runs_no_spark_job(spark, tbl):
+    """Building a read frame is planning only: past Spark's parallel-
+    listing cutoff (32 paths) and with a live deletion vector, no
+    snapshot/change read starts a job before the caller runs it."""
+    df = spark.range(48).selectExpr(
+        "id", "CAST(id AS STRING) AS v", "CAST(id % 2 AS STRING) AS year"
+    )
+    tbl.append(df.coalesce(1), ["year"], max_records_per_file=1)
+    tbl.append(_df(spark, [(100, "x", "2024")]), ["year"])
+    tbl.delete_where(spark, "id = 3", mode="dv")
+    state = tbl._replay(tbl.latest_version())
+    assert len(state["files"]) >= 40 and state["dvs"]
+    builds = {
+        "snapshot": lambda: tbl.snapshot(spark),
+        "snapshot_where": lambda: tbl.snapshot(spark, where="id < 10"),
+        "read_changes": lambda: tbl.read_changes(spark, 0),
+        "read_change_feed": lambda: tbl.read_change_feed(spark, 0),
+    }
+    jobs = {name: count_spark_jobs(spark, build) for name, build in builds.items()}
+    assert jobs == dict.fromkeys(builds, 0)
+    assert tbl.snapshot(spark).count() == 48
+    assert tbl.read_change_feed(spark, 0).count() == 50
+
+
 # ---- data skipping (file-level column stats) --------------------------
 
 
@@ -2505,6 +2568,29 @@ def test_expire_snapshots_keeps_stream_txn_watermark(spark, tbl):
     assert got == v0 and tbl.latest_version() == v0
 
 
+def test_first_idempotent_append_scans_the_log_once(spark, tbl, monkeypatch):
+    """A new app's first ``append(txn_app=...)`` scans the log for the
+    app's watermark once: the commit re-checks only the commits that
+    landed after the append's own check, not the whole log again."""
+    for i in range(9):  # v9 is a checkpoint: the replay reads no commit
+        tbl.append(_df(spark, [(i, "x", "2024")]))
+    n = tbl.latest_version()
+    reads = []
+    orig = TransactionLog._read_commit
+
+    def counting(self, version):
+        reads.append(version)
+        return orig(self, version)
+
+    monkeypatch.setattr(TransactionLog, "_read_commit", counting)
+    v = tbl.append(_df(spark, [(99, "y", "2024")]), txn_app="new-app", txn_version=0)
+    assert v == n + 1
+    assert len(reads) <= n + 3, sorted(reads)
+    # the watermark is recorded and a replay of the batch is a no-op
+    assert tbl.last_txn_version("new-app") == 0
+    assert tbl.append(_df(spark, [(99, "y", "2024")]), txn_app="new-app", txn_version=0) == v
+
+
 @pytest.mark.slow
 def test_metadata_tables_snapshots_and_files(spark, tbl):
     """snapshots_df / files_df — the Iceberg metadata-table / Delta
@@ -3507,7 +3593,8 @@ def test_cross_process_disjoint_deletes_both_commit(spark, tmp_path):
     processes: two JVMs, synchronized start, each deleting its OWN
     partition of one table.  Both must commit WITHOUT surfacing
     ConcurrentCommitError to the caller (the loser rebases inside
-    _commit_rmw), versions gapless, final state = both deletions."""
+    _commit's rmw policy), versions gapless, final state = both
+    deletions."""
     import subprocess
     import sys
     import time
@@ -3596,8 +3683,8 @@ def test_cross_process_disjoint_key_merges_both_commit(spark, tmp_path):
     start, each merge_upserting keys that live in its OWN partition.
     Each merge's min/max-key read surface misses the other's removes,
     so both commit WITHOUT surfacing ConcurrentCommitError (the loser
-    rebases inside _commit_rmw); versions gapless; final state carries
-    both updates."""
+    rebases inside _commit's rmw policy); versions gapless; final state
+    carries both updates."""
     import subprocess
     import sys
     import time

@@ -637,6 +637,40 @@ def test_lakehouse_commits_through_one_site():
     assert callers == ["lakehouse.py:_commit"], callers
 
 
+def test_lakehouse_parquet_reads_state_their_schema():
+    """Every ``spark.read...parquet(`` chain in ``lakehouse.py`` states
+    its schema: the log (or the fixed DV sidecar layout) already knows
+    it, and a read that infers it runs a hidden footer job on every
+    build of the frame."""
+    import ast
+    from pathlib import Path
+
+    import platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark as pkg_mod
+
+    src = Path(pkg_mod.__file__).parent / "lakehouse.py"
+    reads, bad = 0, []
+    for node in ast.walk(ast.parse(src.read_text())):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            continue
+        chain, cur = [], node.func.value
+        while isinstance(cur, (ast.Call, ast.Attribute)):
+            if isinstance(cur, ast.Call):
+                cur = cur.func
+            else:
+                chain.append(cur.attr)
+                cur = cur.value
+        if "read" in chain:
+            reads += 1
+            if "schema" not in chain:
+                bad.append(f"lakehouse.py:{node.lineno}")
+    assert reads >= 3, reads
+    assert not bad, f"schema-inferring parquet reads: {bad}"
+
+
 def test_rotation_fronts_new_then_stalest_green():
     """Driver-sample rotation: never-verified oracle entries first,
     then verified entries ordered by the round of their latest green
