@@ -13,6 +13,8 @@ are chosen for a large cluster but validated on ``local[N]``:
   ``migration_tp_utc`` in UTC (sybaseiq_extractor.py:42) and the DuckDB
   oracle compares timestamps as UTC-naive.
 * Arrow enabled for the Pandas-UDF slow path.
+* Shuffle/broadcast blocks compressed with lz4 (a constant, measured
+  against zstd in OPTIMIZATION_r12.md); parquet data files with snappy.
 * Driver heap sized to the host (``default_driver_memory``) unless
   ``SPARK_DRIVER_MEMORY`` sets it.
 * File listing stays on the driver (``SERIAL_LISTING_PATHS``): a read
@@ -75,25 +77,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Shuffle/broadcast codec (guide §2.3: "There is no universal
-        # answer — measure both").  r11 shipped zstd unconditionally on
-        # an sf10-only measurement and regressed the sf0.1 headline 25%
-        # (PERF_r11: geomean 0.79, 14/19 slower — zstd's CPU-per-block
-        # cost dominates at sub-MB shuffle sizes).  r12 A/B under the
-        # driver protocol (bench.py, sf0.1, cold JVM, idle host):
-        # numbers in OPTIMIZATION_r12.md — the default below ships the
-        # measured winner; SPARK_GRAFT_IO_CODEC overrides for scale
-        # deployments (zstd stays right for the multi-GB token shuffles
-        # measured at sf10).  Parquet file codec stays snappy — data
-        # file bytes are part of committed artifacts.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config(
-            "spark.io.compression.zstd.level",
-            os.environ.get("SPARK_GRAFT_ZSTD_LEVEL", "1"),
-        )
+        # Shuffle/broadcast codec: lz4.  zstd's CPU cost per block
+        # dominates at sub-MB shuffle sizes; it regressed the sf0.1
+        # bench headline 25% when shipped unconditionally, and the
+        # measured A/B chose lz4 (OPTIMIZATION_r12.md).  Parquet file
+        # codec stays snappy — data file bytes are committed artifacts.
+        .config("spark.io.compression.codec", "lz4")
         # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
         # deliberately LEFT AT ITS false DEFAULT (r12, measured twice):
         # true lets AQE coalesce a persisted frame's output to 1-2

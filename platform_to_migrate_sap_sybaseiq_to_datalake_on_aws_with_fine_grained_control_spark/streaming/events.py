@@ -16,12 +16,22 @@ Each builder takes a *streaming or batch* DataFrame with columns
 ``(event_id, ts, user_id, event_type, value)``; the transformations
 are identical in both modes (the point of Structured Streaming), which
 is how the tests validate them: run on a stream, compare with batch.
+
+Two skeletons are shared: every keyed-state operator reads its key's
+micro-batch through :func:`_batch_in_order`, and every
+``run_streaming_*`` sketch maintainer is a ``delta``/``merge`` pair
+driven by :func:`_maintain_log`.  Ordering contract: within a
+micro-batch rows fold in ``(ts, event_id)`` order, across micro-batches
+in arrival order — so an event-time-ordered replay (time-sliced files,
+a log-compacted CDC feed) reproduces the batch result exactly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from pathlib import Path
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,6 +59,34 @@ def _with_event_time(df: DataFrame, ts_col: str) -> DataFrame:
     if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
         return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df
+
+
+def _epoch_us(ts: pd.Series) -> pd.Series:
+    """``ts`` as epoch micros, whatever unit Arrow delivered it in (ns
+    for TIMESTAMP, us for naive-parquet NTZ columns); an integer column
+    is taken as micros already."""
+    if not str(ts.dtype).startswith("datetime"):
+        return ts.astype("int64")
+    return ts.astype("datetime64[us]").astype("int64")
+
+
+def _batch_in_order(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    """One key's micro-batch as one frame in ``(ts, event_id)`` order,
+    or ``None`` when the batch is empty.
+
+    A key whose batch exceeds ``arrow.maxRecordsPerBatch`` arrives as
+    several Arrow chunks in shuffle order; folding or sorting chunk by
+    chunk would take ts-later rows of an early chunk before ts-earlier
+    rows of a later one.  So all chunks are gathered, then sorted once;
+    ``event_id`` breaks ``ts`` ties, making replays deterministic.
+    """
+    chunks = list(pdfs)
+    if not chunks:
+        return None
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    if pdf.empty:
+        return None
+    return pdf.sort_values(["ts", "event_id"])
 
 
 def tumbling_counts(
@@ -116,33 +154,23 @@ def stateful_user_counter(events: DataFrame, timeout_ms: int = 60_000) -> DataFr
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
-        if state.hasTimedOut:
-            n, last_us = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                    "status": ["expired"],
-                }
-            )
-            return
         n, last_us = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # normalize to µs regardless of the Arrow-delivered unit
-            # (ns for TIMESTAMP, us for naive-parquet NTZ columns)
-            ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
-            last_us = max(last_us, int(ts_us.max()))
-        state.update((n, last_us))
-        state.setTimeoutDuration(timeout_ms)
+        if state.hasTimedOut:
+            state.remove()
+            status = "expired"
+        else:
+            for pdf in pdfs:
+                n += len(pdf)
+                last_us = max(last_us, int(_epoch_us(pdf["ts"]).max()))
+            state.update((n, last_us))
+            state.setTimeoutDuration(timeout_ms)
+            status = "active"
         yield pd.DataFrame(
             {
                 "user_id": [user_id],
                 "n_events": [n],
                 "last_ts": [pd.Timestamp(last_us, unit="us")],
-                "status": ["active"],
+                "status": [status],
             }
         )
 
@@ -313,11 +341,10 @@ def stateful_sessionizer(events: DataFrame, gap_s: int = 1800) -> DataFrame:
             yield emit(start_us, last_us, n)
             return
 
-        import numpy as np
-
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values("ts", kind="mergesort")
-        ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        pdf = _batch_in_order(pdfs)
+        if pdf is None:
+            return
+        ts_us = _epoch_us(pdf["ts"]).to_numpy()
 
         # vectorized gap split of THIS batch: segment k spans
         # rows starts_idx[k] .. starts_idx[k+1]-1
@@ -454,19 +481,9 @@ def stateful_ewma(events: DataFrame, alpha: float = 0.2) -> DataFrame:
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         ewma, n = state.get if state.exists else (None, 0)
-        # gather ALL Arrow chunks before sorting: a key whose batch
-        # spans several chunks would otherwise fold them in shuffle
-        # order and diverge from the batch EWMA (same fix as the quota
-        # admitter)
-        chunks = [p.dropna(subset=["value"]) for p in pdfs]
-        if chunks:
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1
-                else chunks[0]
-            ).sort_values(["ts", "event_id"])
-            for v in pdf["value"].astype("float64"):
-                v = float(v)
+        pdf = _batch_in_order(pdfs)
+        if pdf is not None:
+            for v in pdf["value"].dropna().astype("float64").tolist():
                 ewma = v if ewma is None else alpha * v + (1.0 - alpha) * ewma
                 n += 1
         if ewma is None:
@@ -575,34 +592,13 @@ def stateful_funnel_matcher(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
-        if state.exists:
-            (csv,) = state.get
-            pending = [int(x) for x in csv.split(",")] if csv else []
-        else:
-            pending = []
+        (csv,) = state.get if state.exists else ("",)
+        pending = [int(x) for x in csv.split(",")] if csv else []
         out: list[tuple[int, int, float]] = []
-        horizon = window_s * 1_000_000
-        # gather ALL Arrow chunks, sort ONCE: per-chunk folds would
-        # process chunks in shuffle order and mis-match FIFO pairs when
-        # a key's batch spans several chunks (same fix as the quota
-        # admitter)
-        chunks = list(pdfs)
-        if chunks:
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1
-                else chunks[0]
-            ).sort_values(["ts", "event_id"])
-            ets = (
-                pdf["ts"].astype("datetime64[us]").astype("int64")
-                if str(pdf["ts"].dtype).startswith("datetime")
-                else pdf["ts"].astype("int64")
-            )
-            pending, out = _funnel_fold(
-                pending,
-                [(int(us), et) for us, et in zip(ets, pdf["event_type"])],
-                horizon,
-            )
+        pdf = _batch_in_order(pdfs)
+        if pdf is not None:
+            ordered = zip(_epoch_us(pdf["ts"]).tolist(), pdf["event_type"])
+            pending, out = _funnel_fold(pending, list(ordered), window_s * 1_000_000)
         state.update((",".join(str(x) for x in pending),))
         if out:
             yield pd.DataFrame(
@@ -706,19 +702,9 @@ def stateful_quota_admitter(events: DataFrame, quota_n: int = 5) -> DataFrame:
         def handleInputRows(self, key, rows, timer_values):
             (user_id,) = key
             n = self._admitted.get()[0] if self._admitted.exists() else 0
-            # Gather ALL Arrow chunks before sorting: a key whose batch
-            # exceeds arrow.maxRecordsPerBatch arrives as several
-            # chunks in shuffle order, and sorting per-chunk would
-            # admit ts-later rows from an early chunk over ts-earlier
-            # rows from a later one (r5 review finding).
-            chunks = [pdf[["ts", "event_id"]] for pdf in rows]
+            allrows = _batch_in_order(rows)
             out_ids: list[int] = []
-            if chunks and n < quota_n:
-                allrows = (
-                    pd.concat(chunks, ignore_index=True)
-                    if len(chunks) > 1
-                    else chunks[0]
-                ).sort_values(["ts", "event_id"])
+            if allrows is not None and n < quota_n:
                 take = min(quota_n - n, len(allrows))
                 out_ids = [int(x) for x in allrows["event_id"].iloc[:take]]
                 n += take
@@ -742,6 +728,49 @@ def stateful_quota_admitter(events: DataFrame, quota_n: int = 5) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
+
+
+_Reduce = Callable[[DataFrame], DataFrame]
+
+
+def _maintain_log(
+    spark, src_dir: str, work_dir: str, log: str, delta: _Reduce, merge: _Reduce
+) -> DataFrame:
+    """The driver every ``run_streaming_*`` sketch maintainer shares:
+    replay ``src_dir`` one file per trigger under ``availableNow``
+    (checkpoint ``{work_dir}/ckpt``), APPEND each micro-batch's
+    ``delta(batch)`` to the log ``{work_dir}/{log}`` behind
+    :func:`idempotent_foreach_batch` markers, return ``merge(log)``.
+
+    If no micro-batch ever wrote the log (nothing new under ``src_dir``
+    and the log cleared), returns ``merge(delta(<empty source frame>))``
+    — empty and typed like a non-empty result, not PATH_NOT_FOUND.
+    """
+    log_dir = f"{work_dir}/{log}"
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        # 1-task reduce + 1 file per micro-batch (r12, guide §2.4/§6):
+        # every sketch delta is a few hundred rows, and streaming
+        # disables AQE, so the session's 32-way exchange fanned a tiny
+        # write into 32 tasks + up to 32 files per batch for nothing.
+        # coalesce(1) merges the post-shuffle partitions into one
+        # reduce task; committed rows are identical.
+        delta(batch_df).coalesce(1).write.mode("append").parquet(log_dir)
+
+    schema = spark.read.parquet(src_dir).schema
+    (
+        replay_events_stream(spark, src_dir, schema)
+        .writeStream.foreachBatch(
+            idempotent_foreach_batch(apply, f"{work_dir}/markers")
+        )
+        .option("checkpointLocation", f"{work_dir}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    if not Path(log_dir).exists():
+        return merge(delta(spark.createDataFrame([], schema)))
+    return merge(spark.read.parquet(log_dir))
 
 
 def run_streaming_hll(
@@ -768,41 +797,12 @@ def run_streaming_hll(
     """
     from ..functions.sketches import hll_register_rows
 
-    regs_dir = f"{work_dir}/regs"
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            # 1-task reduce + 1 file per micro-batch (r12, guide §2.4/§6):
-            # the per-batch register/counter delta is a few hundred rows, and
-            # streaming disables AQE, so the session's 32-way exchange fanned
-            # a tiny write into 32 tasks + up to 32 files per batch for
-            # nothing.  coalesce(1) merges the post-shuffle partitions into
-            # one reduce task; committed rows are identical.
-            hll_register_rows(batch_df, key_col)
-            .groupBy("idx")
-            .agg(F.max("rho").alias("m"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(regs_dir)
-        )
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            idempotent_foreach_batch(apply, f"{work_dir}/markers")
-        )
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(regs_dir).groupBy("idx").agg(F.max("m").alias("m"))
+    return _maintain_log(
+        spark, src_dir, work_dir, "regs",
+        lambda b: hll_register_rows(b, key_col)
+        .groupBy("idx")
+        .agg(F.max("rho").alias("m")),
+        lambda log: log.groupBy("idx").agg(F.max("m").alias("m")),
     )
 
 
@@ -825,35 +825,10 @@ def run_streaming_cms(
     """
     from ..functions.sketches import cms_counter_rows
 
-    regs_dir = f"{work_dir}/counters"
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cms_counter_rows(batch_df, key_col)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(regs_dir)
-        )
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            idempotent_foreach_batch(apply, f"{work_dir}/markers")
-        )
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(regs_dir)
-        .groupBy("i", "b")
-        .agg(F.sum("c").alias("c"))
+    return _maintain_log(
+        spark, src_dir, work_dir, "counters",
+        lambda b: cms_counter_rows(b, key_col),
+        lambda log: log.groupBy("i", "b").agg(F.sum("c").alias("c")),
     )
 
 
@@ -879,60 +854,21 @@ def run_streaming_bin_counts(
     and no raw-value retention — the only full-width pass is the
     per-batch binning map.
     """
-    counts_dir = f"{work_dir}/bincounts"
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(
-                F.col(group_col),
-                F.expr(bin_expr).alias("bin"),
-                F.expr(period_expr).alias("period"),
-            )
-            .groupBy(group_col, "bin")
-            .agg(
-                F.count(F.when(F.col("period") == "base", 1)).alias("nb"),
-                F.count(F.when(F.col("period") == "cur", 1)).alias("nc"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(counts_dir)
+    return _maintain_log(
+        spark, src_dir, work_dir, "bincounts",
+        lambda b: b.select(
+            F.col(group_col),
+            F.expr(bin_expr).alias("bin"),
+            F.expr(period_expr).alias("period"),
         )
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            idempotent_foreach_batch(apply, f"{work_dir}/markers")
-        )
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pathlib import Path
-
-    if not Path(counts_dir).exists():
-        # zero micro-batches (nothing new under src_dir): no delta
-        # parquet was ever written — return an empty count table typed
-        # exactly as the per-batch reduction would have produced it,
-        # not PATH_NOT_FOUND
-        return (
-            spark.createDataFrame([], schema)
-            .select(F.col(group_col), F.expr(bin_expr).alias("bin"))
-            .groupBy(group_col, "bin")
-            .agg(
-                F.count(F.lit(1)).alias("nb"),
-                F.count(F.lit(1)).alias("nc"),
-            )
-        )
-    return (
-        spark.read.parquet(counts_dir)
         .groupBy(group_col, "bin")
-        .agg(F.sum("nb").alias("nb"), F.sum("nc").alias("nc"))
+        .agg(
+            F.count(F.when(F.col("period") == "base", 1)).alias("nb"),
+            F.count(F.when(F.col("period") == "cur", 1)).alias("nc"),
+        ),
+        lambda log: log.groupBy(group_col, "bin").agg(
+            F.sum("nb").alias("nb"), F.sum("nc").alias("nc")
+        ),
     )
 
 
@@ -954,41 +890,19 @@ def run_streaming_hll_windows(
     count-distinct shuffle or watermark-dropped accuracy."""
     from ..functions.sketches import hll_register_rows
 
-    regs_dir = f"{work_dir}/regs"
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
+    def delta(batch_df: DataFrame) -> DataFrame:
         keyed = batch_df.select(
-            F.expr(f"CAST(date_trunc('hour', {ts_col}) AS STRING)").alias(
-                "win"
-            ),
+            F.expr(f"CAST(date_trunc('hour', {ts_col}) AS STRING)").alias("win"),
             F.col(key_col).alias("k"),
         )
-        (
+        return (
             hll_register_rows(keyed, "k", carry=("win",))
             .groupBy("win", "idx")
             .agg(F.max("rho").alias("m"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(regs_dir)
         )
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            idempotent_foreach_batch(apply, f"{work_dir}/markers")
-        )
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(regs_dir)
-        .groupBy("win", "idx")
-        .agg(F.max("m").alias("m"))
+    return _maintain_log(
+        spark, src_dir, work_dir, "regs",
+        delta,
+        lambda log: log.groupBy("win", "idx").agg(F.max("m").alias("m")),
     )

@@ -694,3 +694,100 @@ def test_rotation_fronts_new_then_stalest_green():
             assert not seen_verified, (
                 f"never-verified entry {n} sorted behind verified ones"
             )
+
+
+def _pkg_dir():
+    from pathlib import Path
+
+    import platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark as pkg_mod
+
+    return Path(pkg_mod.__file__).parent
+
+
+def test_streaming_sketch_maintainers_share_one_driver():
+    """``foreachBatch`` appears in ``streaming/events.py`` only inside
+    ``_maintain_log``: every ``run_streaming_*`` sketch maintainer is a
+    ``delta``/``merge`` pair on that one driver, so a hand-written
+    copy of the replay/marker/checkpoint loop fails here."""
+    import ast
+
+    tree = ast.parse((_pkg_dir() / "streaming" / "events.py").read_text())
+    sites = [
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Attribute) and node.attr == "foreachBatch"
+    ]
+    assert sites == ["_maintain_log"], sites
+
+
+def test_keyed_state_handlers_do_not_gather_batches_themselves():
+    """No handler passed to ``applyInPandasWithState`` or
+    ``transformWithStateInPandas`` calls ``pd.concat`` or
+    ``sort_values`` itself: a key's micro-batch is gathered and put in
+    ``(ts, event_id)`` order by ``streaming.events._batch_in_order``
+    alone."""
+    import ast
+
+    pkg = _pkg_dir()
+    handlers, bad = [], []
+    for mod in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(mod.read_text())
+        for outer in tree.body:
+            if not isinstance(outer, ast.FunctionDef):
+                continue
+            local = {
+                n.name: n
+                for n in ast.walk(outer)
+                if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+            }
+            for call in ast.walk(outer):
+                if not (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr
+                    in ("applyInPandasWithState", "transformWithStateInPandas")
+                ):
+                    continue
+                args = list(call.args) + [
+                    k.value for k in call.keywords
+                    if k.arg in ("func", "statefulProcessor")
+                ]
+                handler = args[0].func if isinstance(args[0], ast.Call) else args[0]
+                assert isinstance(handler, ast.Name), ast.dump(handler)
+                where = f"{mod.relative_to(pkg)}:{outer.name}.{handler.id}"
+                handlers.append(where)
+                for node in ast.walk(local[handler.id]):
+                    if isinstance(node, ast.Attribute) and (
+                        node.attr == "sort_values"
+                        or (
+                            node.attr == "concat"
+                            and isinstance(node.value, ast.Name)
+                            and node.value.id == "pd"
+                        )
+                    ):
+                        bad.append(f"{where}:{node.lineno} {node.attr}")
+    assert len(handlers) >= 5, handlers
+    assert not bad, bad
+
+
+def test_package_reads_no_spark_graft_knobs_but_cpus():
+    """The package reads no ``SPARK_GRAFT_*`` environment variable
+    other than ``SPARK_GRAFT_CPUS``: session settings are constants
+    (or derived from the host), not per-caller env overrides."""
+    import ast
+    import re
+
+    pkg = _pkg_dir()
+    knob = re.compile(r"SPARK_GRAFT_\w+")
+    found = sorted(
+        f"{mod.relative_to(pkg)}:{node.value}"
+        for mod in pkg.rglob("*.py")
+        for node in ast.walk(ast.parse(mod.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and knob.fullmatch(node.value)
+        and node.value != "SPARK_GRAFT_CPUS"
+    )
+    assert not found, found

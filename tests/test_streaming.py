@@ -22,6 +22,9 @@ from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_contr
     SourceRegistry,
     load_table,
 )
+from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.streaming import (
+    events as sev,
+)
 from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.streaming.events import (
     replay_events_stream,
     session_counts,
@@ -1210,33 +1213,206 @@ def test_streaming_cms_requires_idempotence_markers(spark, tmp_path):
     )
 
 
-def test_streaming_bin_counts_zero_new_batches_returns_empty(spark, tmp_path):
+#: Three micro-batch files: (event_id, minute, user_id, event_type,
+#: value).  User 1 has 7 events in the first batch, with tied minutes;
+#: the last file is a far-future sentinel per user that closes every
+#: open session.
+_CHUNKED_BATCHES = [
+    [
+        (1, 0, 1, "signup", 1.0),
+        (2, 0, 1, "view", 2.0),
+        (3, 5, 1, "purchase", 3.0),
+        (4, 5, 1, "signup", None),
+        (5, 10, 1, "view", 4.0),
+        (6, 50, 1, "signup", 5.0),
+        (7, 55, 1, "purchase", 6.0),
+        (8, 1, 2, "signup", 1.5),
+        (9, 120, 2, "purchase", 2.5),
+    ],
+    [
+        (10, 180, 1, "signup", 7.0),
+        (11, 180, 1, "purchase", 8.0),
+        (12, 190, 1, "purchase", 9.0),
+        (13, 190, 1, "view", None),
+        (14, 200, 1, "signup", 10.0),
+        (15, 200, 1, "purchase", 11.0),
+        (16, 150, 2, "view", 12.0),
+    ],
+    [(17, 600, 1, "sentinel", 0.0), (18, 600, 2, "sentinel", 0.0)],
+]
+_CHUNKED_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double"
+)
+
+
+@pytest.fixture(scope="module")
+def chunked_events(spark, tmp_path_factory):
+    """The batches above as a replayable parquet dir, each file written
+    in DESCENDING (ts, event_id) order, plus the whole input as one
+    pandas frame in (ts, event_id) order."""
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("chunked_events")
+    base = pd.Timestamp("2024-01-01")
+    frames = []
+    for rows in _CHUNKED_BATCHES:
+        pdf = pd.DataFrame(
+            rows, columns=["event_id", "minute", "user_id", "event_type", "value"]
+        )
+        pdf.insert(1, "ts", base + pd.to_timedelta(pdf.pop("minute"), unit="min"))
+        pdf = pdf.sort_values(["ts", "event_id"], ascending=False)
+        spark.createDataFrame(pdf, _CHUNKED_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(d))
+        frames.append(pdf)
+    return str(d), pd.concat(frames).sort_values(["ts", "event_id"], ignore_index=True)
+
+
+@pytest.mark.parametrize(
+    "op", ["user_counter", "sessionizer", "ewma", "funnel", "quota"]
+)
+def test_stateful_operators_fold_multi_chunk_batches(spark, chunked_events, op):
+    """With ``arrow.maxRecordsPerBatch`` at 2, a key's micro-batch
+    reaches each keyed-state operator as several Arrow chunks in
+    reverse order; every operator still equals its batch result,
+    computed here in pandas over the (ts, event_id)-ordered input."""
+    import numpy as np
+
+    src, pdf = chunked_events
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "2"}
+    if op == "quota":
+        pytest.importorskip(
+            "google.protobuf.descriptor",
+            reason="transformWithStateInPandas requires protobuf",
+        )
+        conf["spark.sql.streaming.stateStore.providerClass"] = (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        )
+    build, mode = {
+        "user_counter": (sev.stateful_user_counter, "update"),
+        "sessionizer": (sev.stateful_sessionizer, "append"),
+        "ewma": (sev.stateful_ewma, "update"),
+        "funnel": (sev.stateful_funnel_matcher, "update"),
+        "quota": (lambda s: sev.stateful_quota_admitter(s, quota_n=3), "update"),
+    }[op]
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        stream = replay_events_stream(spark, src, _CHUNKED_SCHEMA)
+        # processing-time timers keep the counter's query alive
+        _run_stream_to_memory(
+            build(stream), f"chunked_{op}", mode,
+            drain_then_stop=op == "user_counter",
+        )
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    got = spark.sql(f"SELECT * FROM chunked_{op}").toPandas()
+
+    def us(col):
+        return col.astype("datetime64[us]").astype("int64").tolist()
+
+    by_user = list(pdf.groupby("user_id"))
+    if op in ("user_counter", "ewma"):
+        # update mode re-emits a user's running value: keep the latest
+        got = got.sort_values("n_events").groupby("user_id").tail(1)
+    if op == "user_counter":
+        got_v = set(zip(got["user_id"], got["n_events"], us(got["last_ts"])))
+        exp = {(u, len(g), max(us(g["ts"]))) for u, g in by_user}
+    elif op == "sessionizer":
+        got_v = set(
+            zip(got["user_id"], us(got["session_start"]), us(got["session_end"]),
+                got["n_events"])
+        )
+        exp = set()
+        for u, g in by_user:
+            t = np.array(us(g["ts"]))
+            cut = np.r_[0, np.flatnonzero(np.diff(t) > 1800 * 10**6) + 1, len(t)]
+            sessions = [
+                (u, int(t[a]), int(t[b - 1]), int(b - a))
+                for a, b in zip(cut[:-1], cut[1:])
+            ]
+            exp |= set(sessions[:-1])  # the sentinel's session stays open
+    elif op == "ewma":
+        got_v = set(zip(got["user_id"], got["n_events"], got["ewma_value"]))
+        exp = set()
+        for u, g in by_user:
+            vals = g["value"].dropna().tolist()
+            ewma = vals[0]
+            for v in vals[1:]:
+                ewma = 0.2 * v + (1.0 - 0.2) * ewma
+            exp.add((u, len(vals), ewma))
+    elif op == "funnel":
+        got_v = set(zip(got["user_id"], got["signup_us"], got["purchase_us"]))
+        exp = set()
+        horizon = 3600 * 10**6
+        for u, g in by_user:
+            pending: list[int] = []
+            for t, etype in zip(us(g["ts"]), g["event_type"]):
+                if etype == "signup":
+                    pending.append(t)
+                elif etype == "purchase":
+                    while pending and pending[0] < t - horizon:
+                        pending.pop(0)
+                    if pending and pending[0] < t:
+                        exp.add((u, pending.pop(0), t))
+    else:
+        got_v = set(zip(got["user_id"], got["event_id"], got["admit_seq"]))
+        head = pdf.groupby("user_id").head(3)
+        seq = head.groupby("user_id").cumcount() + 1
+        exp = set(zip(head["user_id"], head["event_id"], seq))
+    assert exp and got_v == exp
+
+
+_MAINTAINERS = {
+    # name -> (delta log dir under work_dir, run(spark, src, work_dir))
+    "hll": ("regs", lambda sp, src, w: sev.run_streaming_hll(sp, src, "user_id", w)),
+    "cms": ("counters", lambda sp, src, w: sev.run_streaming_cms(sp, src, "user_id", w)),
+    "bin_counts": (
+        "bincounts",
+        lambda sp, src, w: sev.run_streaming_bin_counts(
+            sp, src, w, "CAST(v AS STRING)", "period"
+        ),
+    ),
+    "hll_windows": (
+        "regs",
+        lambda sp, src, w: sev.run_streaming_hll_windows(sp, src, "user_id", "ts", w),
+    ),
+}
+
+
+@pytest.mark.parametrize("maintainer", sorted(_MAINTAINERS))
+def test_streaming_maintainer_zero_new_batches_returns_empty(
+    spark, tmp_path, maintainer
+):
     """A run where the source yields ZERO micro-batches (checkpoint
-    already covers every file) and no count delta was ever written
-    must return an empty typed count table, not PATH_NOT_FOUND."""
+    already covers every file) and no delta was ever written must
+    return an empty result typed exactly like the non-empty run's,
+    not PATH_NOT_FOUND — for every sketch maintainer."""
+    import datetime as dt
     import shutil
 
-    from platform_to_migrate_sap_sybaseiq_to_datalake_on_aws_with_fine_grained_control_spark.streaming.events import (
-        run_streaming_bin_counts,
-    )
-
+    log, run = _MAINTAINERS[maintainer]
     src = str(tmp_path / "src")
     work = str(tmp_path / "work")
+    t0 = dt.datetime(2024, 1, 1)
     spark.createDataFrame(
-        [("a", 1, "base"), ("a", 2, "cur")], ["event_type", "v", "period"]
+        [("a", 1, "base", 7, t0), ("a", 2, "cur", 8, t0 + dt.timedelta(hours=1))],
+        ["event_type", "v", "period", "user_id", "ts"],
     ).write.parquet(src)
-    first = run_streaming_bin_counts(
-        spark, src, work, "CAST(v AS STRING)", "period"
-    )
-    assert first.count() == 2
+    first = run(spark, src, work)
+    assert first.count() > 0
     # wipe the delta log; the checkpoint still marks the file done, so
     # the second run sees zero new batches and writes nothing
-    shutil.rmtree(tmp_path / "work" / "bincounts")
-    again = run_streaming_bin_counts(
-        spark, src, work, "CAST(v AS STRING)", "period"
-    )
+    shutil.rmtree(tmp_path / "work" / log)
+    again = run(spark, src, work)
     assert again.count() == 0
-    assert [f.name for f in again.schema.fields] == [
-        "event_type", "bin", "nb", "nc",
-    ]
-    assert again.schema["nb"].dataType.simpleString() == "bigint"
+
+    def typed(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert typed(again) == typed(first)
